@@ -1556,6 +1556,7 @@ def streaming_ann_index_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     from kamiyo_hive_spark.sources.sinks import SCRATCH, ensure_staging
     from kamiyo_hive_spark.sources.txlog import TxLog
+    from kamiyo_hive_spark.streaming.jobs import drain, streaming_run
 
     out_root = (
         f"{SCRATCH}/ann_stream_tx_{ANN_UPSERT_MOD}_{ANN_UPSERT_RES}_"
@@ -1593,21 +1594,14 @@ def streaming_ann_index_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
             .option("maxFilesPerTrigger", "1")
             .parquet(src)
         )
-        prev = spark.conf.get("spark.sql.shuffle.partitions")
-        spark.conf.set("spark.sql.shuffle.partitions", "8")
         try:
-            q = (
-                stream.writeStream.outputMode("append")
-                .foreachBatch(lambda df, bid: merge_batch(log, df, bid))
-                .option("checkpointLocation", ckpt)
-                .start()
-            )
-            try:
-                q.processAllAvailable()
-            finally:
-                q.stop()
+            with streaming_run(stream, "append", 8) as writer:
+                drain(
+                    writer.foreachBatch(lambda df, bid: merge_batch(log, df, bid))
+                    .option("checkpointLocation", ckpt)
+                    .start()
+                )
         finally:
-            spark.conf.set("spark.sql.shuffle.partitions", prev)
             shutil.rmtree(ckpt, ignore_errors=True)
         open(os.path.join(tmp, "_SUCCESS"), "w").close()
 

@@ -271,52 +271,45 @@ def run_dsv2_replay(
 ) -> tuple[DataFrame, EventLogApiServer]:
     """Drive the full replay contract; returns (result, server) so
     tests can additionally pin the server-side observables."""
+    from kamiyo_hive_spark.streaming.jobs import drain, streaming_run
+
     rows = event_log_rows(spark, sf_dir)
     half = len(rows) // 2
     ckpt = tempfile.mkdtemp(prefix="dsv2_replay_ckpt_")
     sink = "dsv2_replay_out"
-    prev = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "4")
-    try:
-        with EventLogApiServer(rows[:half]) as srv:
-            spark.dataSource.register(EventLogRestDataSource)
+    with EventLogApiServer(rows[:half]) as srv:
+        spark.dataSource.register(EventLogRestDataSource)
 
-            def consume_all() -> None:
-                agg = (
-                    spark.readStream.format("rest_event_log")
-                    .option("base_url", srv.base_url)
-                    .option("page_size", str(page_size))
-                    .load()
-                    .groupBy("event_type")
-                    .agg(
-                        F.count("*").alias("n_events"),
-                        money_sum_col("value").alias("total_value"),
-                    )
+        def consume_all() -> None:
+            agg = (
+                spark.readStream.format("rest_event_log")
+                .option("base_url", srv.base_url)
+                .option("page_size", str(page_size))
+                .load()
+                .groupBy("event_type")
+                .agg(
+                    F.count("*").alias("n_events"),
+                    money_sum_col("value").alias("total_value"),
                 )
-                q = (
-                    agg.writeStream.outputMode("complete")
-                    .format("memory")
+            )
+            with streaming_run(agg, "complete") as writer:
+                drain(
+                    writer.format("memory")
                     .queryName(sink)
                     .option("checkpointLocation", ckpt)
                     .start()
                 )
-                try:
-                    q.processAllAvailable()
-                finally:
-                    q.stop()
 
-            consume_all()  # first run: first half of the log
-            srv.append(rows[half:])  # feed advances while we're down
-            consume_all()  # restart from checkpoint: tail only
-            out = (
-                spark.table(sink)
-                .select("event_type", "n_events", "total_value")
-                .orderBy("event_type")
-                .localCheckpoint()  # materialize while the server lives
-            )
-            return out, srv
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev)
+        consume_all()  # first run: first half of the log
+        srv.append(rows[half:])  # feed advances while we're down
+        consume_all()  # restart from checkpoint: tail only
+        out = (
+            spark.table(sink)
+            .select("event_type", "n_events", "total_value")
+            .orderBy("event_type")
+            .localCheckpoint()  # materialize while the server lives
+        )
+        return out, srv
 
 
 @register(

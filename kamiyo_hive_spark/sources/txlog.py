@@ -2160,6 +2160,7 @@ def _register_streaming_dv_query() -> None:
         import time as _time
 
         from kamiyo_hive_spark.sources.sinks import SCRATCH, ensure_staging
+        from kamiyo_hive_spark.streaming.jobs import drain, streaming_run
 
         out_root = os.path.join(
             SCRATCH, f"txlog_dv_stream_{os.path.basename(sf_dir)}"
@@ -2210,21 +2211,14 @@ def _register_streaming_dv_query() -> None:
                 .option("maxFilesPerTrigger", "1")
                 .parquet(req)
             )
-            prev = spark.conf.get("spark.sql.shuffle.partitions")
-            spark.conf.set("spark.sql.shuffle.partitions", "4")
             try:
-                q = (
-                    stream.writeStream.outputMode("append")
-                    .foreachBatch(lambda df, bid: apply_batch(log, df, bid))
-                    .option("checkpointLocation", ckpt)
-                    .start()
-                )
-                try:
-                    q.processAllAvailable()
-                finally:
-                    q.stop()
+                with streaming_run(stream, "append") as writer:
+                    drain(
+                        writer.foreachBatch(lambda df, bid: apply_batch(log, df, bid))
+                        .option("checkpointLocation", ckpt)
+                        .start()
+                    )
             finally:
-                spark.conf.set("spark.sql.shuffle.partitions", prev)
                 shutil.rmtree(ckpt, ignore_errors=True)
             open(os.path.join(tmp, "_SUCCESS"), "w").close()
 
@@ -3386,7 +3380,11 @@ def _register_streaming_sink_query() -> None:
         import shutil
 
         from kamiyo_hive_spark.sources.sinks import SCRATCH, _staging_lock
-        from kamiyo_hive_spark.streaming.jobs import _events_stream
+        from kamiyo_hive_spark.streaming.jobs import (
+            _events_stream,
+            drain,
+            streaming_run,
+        )
 
         root = os.path.join(
             SCRATCH, f"txlog_stream_{os.path.basename(sf_dir)}"
@@ -3400,21 +3398,12 @@ def _register_streaming_sink_query() -> None:
             stream = _events_stream(spark, sf_dir).select(
                 "event_id", "event_type", "value"
             )
-            prev = spark.conf.get("spark.sql.shuffle.partitions")
-            spark.conf.set("spark.sql.shuffle.partitions", "4")
-            try:
-                q = (
-                    stream.writeStream.outputMode("append")
-                    .foreachBatch(lambda df, bid: sink.write(df, bid))
+            with streaming_run(stream, "append") as writer:
+                drain(
+                    writer.foreachBatch(lambda df, bid: sink.write(df, bid))
                     .option("checkpointLocation", ckpt)
                     .start()
                 )
-                try:
-                    q.processAllAvailable()
-                finally:
-                    q.stop()
-            finally:
-                spark.conf.set("spark.sql.shuffle.partitions", prev)
             # Replay batch 0 (crash-recovery path): must be recognized
             # and skipped, leaving the version count untouched.
             v_before = log.version()
@@ -3664,14 +3653,18 @@ def weighted_change_feed(
 
     dv_files = {f for _paths, files, _w in dv_w for f in files}
     scan = sorted(f for f, w in file_w.items() if w != 0 or f in dv_files)
-    if not scan:
-        raise ValueError("weighted feed resolved to an empty scan")
     sch = log.table_schema()
-    reader = (
-        spark.read.schema(T.StructType.fromJson(json.loads(sch)))
-        if sch
-        else spark.read
-    )
+    schema = T.StructType.fromJson(json.loads(sch)) if sch else None
+    if not scan:
+        # Fully telescoped history (e.g. append, then delete every
+        # file): all roles cancel and no row is left. The schema comes
+        # from the log, or from the footer of a file it referenced.
+        if schema is None:
+            schema = spark.read.parquet(os.path.join(log.root, min(file_w))).schema
+        return spark.createDataFrame([], schema).select(
+            *cols, F.lit(0).alias("_weight")
+        )
+    reader = spark.read.schema(schema) if schema else spark.read
     wmap = F.create_map(
         *[x for f in scan for x in (F.lit(f), F.lit(file_w.get(f, 0)))]
     )
@@ -4236,6 +4229,7 @@ def _register_cdf_stream_query() -> None:
         bound; at any table size the per-batch cost tracks the delta,
         never the table."""
         from kamiyo_hive_spark.sources.sinks import SCRATCH, ensure_staging
+        from kamiyo_hive_spark.streaming.jobs import drain, streaming_run
 
         table_root = cdf_table(spark, sf_dir)
         out = os.path.join(SCRATCH, f"txlog_cdf_stream_{os.path.basename(sf_dir)}")
@@ -4285,21 +4279,8 @@ def _register_cdf_stream_query() -> None:
             .alias("total_price"),
         )
         name = "cdf_tail_mem"
-        prev = spark.conf.get("spark.sql.shuffle.partitions")
-        spark.conf.set("spark.sql.shuffle.partitions", "4")
-        try:
-            q = (
-                agg.writeStream.outputMode("complete")
-                .format("memory")
-                .queryName(name)
-                .start()
-            )
-            try:
-                q.processAllAvailable()
-            finally:
-                q.stop()
-        finally:
-            spark.conf.set("spark.sql.shuffle.partitions", prev)
+        with streaming_run(agg, "complete") as writer:
+            drain(writer.format("memory").queryName(name).start())
         return spark.table(name).orderBy("o_orderstatus")
 
 

@@ -23,8 +23,12 @@ append/update so state and output stay incremental.
 
 from __future__ import annotations
 
+import contextlib
+from collections.abc import Iterator
+
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.streaming import DataStreamWriter, StreamingQuery
 
 from kamiyo_hive_spark.functions.money import dec, money_sum_col
 from kamiyo_hive_spark.plans.registry import register
@@ -48,20 +52,58 @@ def _events_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-# Instrumentation hook (scripts/streaming_profile.py): when set to a
-# list, every completed run appends (query_name, recentProgress) so the
-# per-micro-batch durations can be split into one-time state-store init
-# (batch 0) vs steady-state marginal cost (later batches). Never set in
-# production paths.
-_PROGRESS_SINK: list | None = None
+CHECKPOINT_FILE_MANAGER = (
+    "org.apache.spark.sql.execution.streaming.checkpointing."
+    "FileSystemBasedCheckpointFileManager"
+)
 
 
-import contextlib  # noqa: E402
+def _empty_batch_emitter(result: DataFrame, mode: str) -> str | None:
+    """The operator of `result`'s plan that emits rows or fires timers
+    only in a no-data micro-batch when run in `mode`, or None: an
+    append-mode watermarked aggregation (a window is emitted once the
+    watermark passes it), an outer stream-stream join (unmatched rows
+    are emitted on eviction), or a stateful operator with a timeout
+    (timers fire as the watermark or clock advances)."""
+    stack = [result._jdf.queryExecution().analyzed()]
+    watermarked = aggregated = False
+    while stack:
+        node = stack.pop()
+        name = node.nodeName()
+        if name == "EventTimeWatermark":
+            watermarked = True
+        elif name == "Aggregate" and node.isStreaming():
+            aggregated = True
+        elif (
+            name == "Join"
+            and node.left().isStreaming()
+            and node.right().isStreaming()
+            and "Outer" in node.joinType().toString()
+        ):
+            return f"{node.joinType().toString()} stream-stream join"
+        elif name in ("FlatMapGroupsWithState", "FlatMapGroupsInPandasWithState"):
+            timeout = node.timeout().toString()
+            if timeout != "NoTimeout":
+                return f"{name} with {timeout}"
+        children = node.children()
+        stack.extend(children.apply(i) for i in range(children.size()))
+    if mode == "append" and watermarked and aggregated:
+        return "append-mode watermarked aggregation"
+    return None
 
 
 @contextlib.contextmanager
-def bounded_replay_confs(spark: SparkSession, partitions: int):
-    """Session confs for a BOUNDED replay streaming run, restored after.
+def streaming_run(
+    result: DataFrame,
+    mode: str,
+    partitions: int = 4,
+    *,
+    no_data_batches: bool = True,
+) -> Iterator[DataStreamWriter]:
+    """Session confs for one streaming run; yields `result.writeStream`
+    in output mode `mode`. Every streaming query the package starts
+    goes through here. Each conf is restored on exit to its previous
+    value, or unset if it had none.
 
     - `spark.sql.shuffle.partitions`: the state store creates one
       instance per shuffle partition for the life of the query; a host
@@ -72,37 +114,63 @@ def bounded_replay_confs(spark: SparkSession, partitions: int):
       operators (applyInPandasWithState / TWS) are per-key CPU-bound in
       the Python workers and WANT parallelism (16 measured fastest) —
       those call sites override `partitions`.
-    - `noDataMicroBatches` OFF (r11, guide §1.2 "don't compute things
-      you throw away"): the engine's extra empty batch exists to
-      advance the watermark and evict/emit state on an IDLE UNBOUNDED
-      stream; a drained bounded replay never needs it, and it costs a
-      full trigger cycle (queryPlanning + walCommit + a state-store
-      commit per partition — streaming_profile measured the interval
-      join paying a 5th batch at its full ~1 s marginal cost). It
-      cannot change any bounded query's result: complete mode
-      re-emits unchanged state, the dedup/append emissions happen in
-      their data batch, the stream-stream join is INNER (eviction
-      emits nothing; only outer joins emit on eviction), and the
-      stateful operators run NoTimeout (no timer callbacks to fire).
-      Production unbounded jobs keep the engine default; the live
-      runner (streaming/live.py) also keeps it unless the caller is a
-      bounded complete-mode feed, because append-mode watermark
-      emission on a live bus DOES flush via no-data batches
-      (tests/test_streaming_live.py pins that behavior).
+    - `spark.sql.streaming.checkpointFileManagerClass`: the FileSystem
+      checkpoint manager (`CHECKPOINT_FILE_MANAGER`) for the offset and
+      commit logs and the state store. The default FileContext manager,
+      without the native Hadoop library, forks `readlink` twice per
+      checkpoint rename. Every checkpoint these runs write is on the
+      driver's local disk (Spark's temp dir or the package's
+      `SCRATCH`), where that rename is check-then-rename too: Hadoop's
+      `AbstractFileSystem.renameInternal` looks the destination up
+      first, and those lookups are the forks. So no atomicity is lost:
+      a second `createAtomic(p, overwriteIfPossible=false)` still fails
+      with `FileAlreadyExistsException` (tests/test_streaming_run.py).
+      Files still go through the checksummed LocalFileSystem, so CRCs
+      are written and verified. (RawLocalFileSystem would also skip
+      the forks, but drops checksum verification.)
+    - `no_data_batches=False` turns the engine's empty no-data batch
+      OFF (r11, guide §1.2 "don't compute things you throw away"). It
+      exists to advance the watermark and evict/emit state on an IDLE
+      UNBOUNDED stream; a drained bounded replay never needs it, and it
+      costs a full trigger cycle (queryPlanning + walCommit + a
+      state-store commit per partition — streaming_profile measured the
+      interval join paying a 5th batch at its full ~1 s marginal cost).
+      It cannot change a result unless the plan emits in that batch:
+      complete mode re-emits unchanged state, dedup/append emissions
+      happen in their data batch, eviction from an INNER stream-stream
+      join emits nothing, and NoTimeout stateful operators have no
+      timers to fire. `_empty_batch_emitter` finds the plans this does
+      not cover, and such a run raises ValueError here rather than
+      losing rows. Production unbounded jobs and append-mode live feeds
+      keep the engine default: closed-window emission on a live bus
+      flushes via no-data batches (tests/test_streaming_live.py pins
+      that behavior).
     """
-    prev_parts = spark.conf.get("spark.sql.shuffle.partitions")
-    prev_ndb = spark.conf.get(
-        "spark.sql.streaming.noDataMicroBatches.enabled", "true"
-    )
-    spark.conf.set("spark.sql.shuffle.partitions", str(partitions))
-    spark.conf.set("spark.sql.streaming.noDataMicroBatches.enabled", "false")
+    if not no_data_batches:
+        emitter = _empty_batch_emitter(result, mode)
+        if emitter is not None:
+            raise ValueError(
+                f"no-data batches off, but the plan's {emitter} "
+                "emits only in an empty micro-batch"
+            )
+    spark = result.sparkSession
+    confs = {
+        "spark.sql.shuffle.partitions": str(partitions),
+        "spark.sql.streaming.checkpointFileManagerClass": CHECKPOINT_FILE_MANAGER,
+    }
+    if not no_data_batches:
+        confs["spark.sql.streaming.noDataMicroBatches.enabled"] = "false"
+    prev = {key: spark.conf.get(key, None) for key in confs}
+    for key, value in confs.items():
+        spark.conf.set(key, value)
     try:
-        yield
+        yield result.writeStream.outputMode(mode)
     finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev_parts)
-        spark.conf.set(
-            "spark.sql.streaming.noDataMicroBatches.enabled", prev_ndb
-        )
+        for key, value in prev.items():
+            if value is None:
+                spark.conf.unset(key)
+            else:
+                spark.conf.set(key, value)
         # NOT here: StateStore.stop() between bounded runs (unloading
         # the stopped query's providers instead of waiting for the 60 s
         # maintenance tick) — A/B'd NEGATIVE/NEUTRAL r11: 3 alternating
@@ -114,23 +182,20 @@ def bounded_replay_confs(spark: SparkSession, partitions: int):
         # re-arguing).
 
 
+def drain(query: StreamingQuery) -> None:
+    """Process everything the query's source has, then stop it."""
+    try:
+        query.processAllAvailable()
+    finally:
+        query.stop()
+
+
 def _run_to_completion(
     result: DataFrame, name: str, mode: str, partitions: int = 4
 ) -> None:
-    spark = result.sparkSession
-    with bounded_replay_confs(spark, partitions):
-        q = (
-            result.writeStream.outputMode(mode)
-            .format("memory")
-            .queryName(name)
-            .start()
-        )
-        try:
-            q.processAllAvailable()
-            if _PROGRESS_SINK is not None:
-                _PROGRESS_SINK.append((name, list(q.recentProgress)))
-        finally:
-            q.stop()
+    """A bounded replay into the memory sink `name`, no-data batches off."""
+    with streaming_run(result, mode, partitions, no_data_batches=False) as writer:
+        drain(writer.format("memory").queryName(name).start())
 
 
 def window_agg_transform(stream: DataFrame) -> DataFrame:
@@ -936,7 +1001,6 @@ def streaming_interval_join(spark: SparkSession, sf_dir: str) -> DataFrame:
 def _idempotent_sink_run(spark: SparkSession, sf_dir: str, reset: bool) -> DataFrame:
     """Run the foreachBatch exactly-once sink job; with reset=False the
     query restarts from the existing checkpoint (replay/restart path)."""
-    import contextlib
     import os
     import shutil
 
@@ -975,21 +1039,12 @@ def _idempotent_sink_run_locked(
         # transactional sinks.
         batch_df.write.mode("overwrite").parquet(f"{sink}/batch_id={batch_id}")
 
-    prev = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "4")
-    try:
-        q = (
-            agg.writeStream.outputMode("update")
-            .foreachBatch(write_batch)
+    with streaming_run(agg, "update") as writer:
+        drain(
+            writer.foreachBatch(write_batch)
             .option("checkpointLocation", ckpt)
             .start()
         )
-        try:
-            q.processAllAvailable()
-        finally:
-            q.stop()
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev)
 
     from pyspark.sql import Window
 

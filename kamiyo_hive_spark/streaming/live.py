@@ -36,7 +36,7 @@ Scale posture: the socket source is the single-node stand-in for a
 partitioned bus (Kafka); the transforms are source-agnostic, so the
 production swap is `readStream.format("kafka")` + the same
 `from_json` — no operator changes. State sizing notes in
-`_run_to_completion` apply unchanged.
+`streaming.jobs.streaming_run` apply unchanged.
 """
 
 from __future__ import annotations
@@ -317,28 +317,14 @@ def run_live_to_completion(
     a loud failure, never a silently-short result.
 
     ``no_data_batches=False`` opts a COMPLETE-mode bounded feed out of
-    the engine's empty watermark-advancement batches (they re-emit
-    unchanged state — a full trigger cycle of pure overhead while the
-    driver polls for the expected rows). Append-mode callers must keep
-    the default: their closed-window emission FLUSHES via a no-data
-    batch (tests/test_streaming_live.py pins that)."""
-    spark = result.sparkSession
-    prev = spark.conf.get("spark.sql.shuffle.partitions")
-    prev_ndb = spark.conf.get(
-        "spark.sql.streaming.noDataMicroBatches.enabled", "true"
-    )
-    spark.conf.set("spark.sql.shuffle.partitions", str(partitions))
-    if not no_data_batches:
-        spark.conf.set(
-            "spark.sql.streaming.noDataMicroBatches.enabled", "false"
-        )
-    try:
-        q = (
-            result.writeStream.outputMode(mode)
-            .format("memory")
-            .queryName(name)
-            .start()
-        )
+    the engine's empty batches; append-mode callers must keep them
+    (see `streaming.jobs.streaming_run`)."""
+    from kamiyo_hive_spark.streaming.jobs import streaming_run
+
+    with streaming_run(
+        result, mode, partitions, no_data_batches=no_data_batches
+    ) as writer:
+        q = writer.format("memory").queryName(name).start()
         try:
             deadline = time.monotonic() + timeout_s
             seen = 0
@@ -359,8 +345,3 @@ def run_live_to_completion(
             q.processAllAvailable()
         finally:
             q.stop()
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev)
-        spark.conf.set(
-            "spark.sql.streaming.noDataMicroBatches.enabled", prev_ndb
-        )

@@ -96,3 +96,27 @@ def test_weighted_feed_equals_unioned_feeds(spark, tmp_path):
         .collect()
     }
     assert via_weights == head
+
+
+def test_weighted_feed_fully_telescoped_history_is_empty(spark, tmp_path):
+    """Append, then a delete that drops every file and writes none: each
+    row enters and leaves once, so the weighted feed is empty with the
+    usual columns, where the unioned feeds net every group to zero."""
+    log = TxLog.init(str(tmp_path / "gone"))
+    rows = [(i, f"G{i % 3}", float(i) + 0.25) for i in range(30)]
+    log.append(
+        spark.createDataFrame(rows, "k long, grp string, price double"),
+        writer="i0",
+    )
+    assert log.commit(
+        "rewrite", [], removes=log.snapshot_files(), read_version=0,
+        writer="delete-all",
+    ) == 1
+    assert log.snapshot_files() == []
+
+    feed = weighted_change_feed(log, spark, ["grp", "price"])
+    assert feed.schema.simpleString() == (
+        "struct<grp:string,price:double,_weight:int>"
+    )
+    assert feed.count() == 0
+    assert set(_rollup_from_union(log, spark).values()) == {(0, 0.0)}
