@@ -49,10 +49,11 @@ def _guarded_subunit_sum(total: Column) -> Column:
     (default: bench/production hot path, zero plan change) returns it
     unchanged; with SPARK_GRAFT_MONEY_GUARD=1 the aggregate raises if a
     group total reaches 2^53, where the double division would stop
-    round-tripping exactly (see EXACT_DOUBLE_BOUND)."""
+    round-tripping exactly (see EXACT_DOUBLE_BOUND). A NULL total (an
+    empty or all-NULL group) passes through as NULL."""
     if not _guard_enabled():
         return total
-    ok = F.abs(total) < F.lit(EXACT_DOUBLE_BOUND)
+    ok = total.isNull() | (F.abs(total) < F.lit(EXACT_DOUBLE_BOUND))
     err = F.assert_true(
         ok,
         F.concat(

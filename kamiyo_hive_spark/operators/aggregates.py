@@ -186,7 +186,8 @@ def weighted_sum(spark: SparkSession, sf_dir: str) -> DataFrame:
         # sub-units, so the long product is the exact scale-4 value.
         # Capacity: the largest group total measured at sf0.1 is
         # 2.7e15 scale-4 units — 3.3x under 2^53 (bound documented in
-        # money.py; SPARK_GRAFT_MONEY_GUARD turns it into an error).
+        # money.py). SPARK_GRAFT_MONEY_GUARD does NOT cover this inline
+        # sum: it guards only money_sum, rev_sum and money_sum_col.
         .agg(
             (F.sum(cents("l_quantity") * cents("l_extendedprice")) / 1.0e4)
             .cast("double")

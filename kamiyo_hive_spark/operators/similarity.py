@@ -1325,8 +1325,7 @@ def ann_upsert_table(spark: SparkSession, sf_dir: str) -> str:
     the real one's cache (ADVICE r7 medium)."""
     import os
 
-    from kamiyo_hive_spark.sources.sinks import SCRATCH, ensure_staging
-    from kamiyo_hive_spark.sources.txlog import TxLog
+    from kamiyo_hive_spark.sources.sinks import SCRATCH, ensure_txlog
 
     out = (
         f"{SCRATCH}/ann_upsert_tx_{ANN_UPSERT_MOD}_{ANN_UPSERT_RES}_"
@@ -1335,8 +1334,7 @@ def ann_upsert_table(spark: SparkSession, sf_dir: str) -> str:
     source = os.path.join(sf_dir, "embeddings.parquet")
     e = table(spark, sf_dir, "embeddings")
 
-    def build(tmp: str) -> None:
-        log = TxLog.init(tmp)
+    def build(log) -> None:
         base = e.filter(
             F.pmod(F.col("vec_id"), F.lit(ANN_UPSERT_MOD)) != ANN_UPSERT_RES
         ).select("vec_id", "label", "embedding")
@@ -1346,12 +1344,8 @@ def ann_upsert_table(spark: SparkSession, sf_dir: str) -> str:
             spec="bucket",
             writer="ann_base_load",
         )
-        # staging_current requires the root _SUCCESS marker; the txlog
-        # write lands its own under data/<uuid>/, not the table root
-        with open(os.path.join(tmp, "_SUCCESS"), "w"):
-            pass
 
-    return ensure_staging(out, source, build)
+    return ensure_txlog(out, source, build).root
 
 
 def _ann_upsert_merged_log(spark: SparkSession, sf_dir: str):
@@ -1554,7 +1548,7 @@ def streaming_ann_index_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
     import os
     import shutil
 
-    from kamiyo_hive_spark.sources.sinks import SCRATCH, ensure_staging
+    from kamiyo_hive_spark.sources.sinks import SCRATCH, ensure_txlog
     from kamiyo_hive_spark.sources.txlog import TxLog
     from kamiyo_hive_spark.streaming.jobs import drain, streaming_run
 
@@ -1578,10 +1572,9 @@ def streaming_ann_index_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         return True
 
-    def build(tmp: str) -> None:
-        ckpt = tmp + ".ckpt"
+    def build(log: TxLog) -> None:
+        ckpt = log.root + ".ckpt"
         shutil.rmtree(ckpt, ignore_errors=True)
-        log = TxLog.init(tmp)
         e = table(spark, sf_dir, "embeddings")
         base = e.filter(
             F.pmod(F.col("vec_id"), F.lit(ANN_UPSERT_MOD)) != ANN_UPSERT_RES
@@ -1603,10 +1596,8 @@ def streaming_ann_index_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
                 )
         finally:
             shutil.rmtree(ckpt, ignore_errors=True)
-        open(os.path.join(tmp, "_SUCCESS"), "w").close()
 
-    root = ensure_staging(out_root, source, build)
-    log = TxLog(root)
+    log = ensure_txlog(out_root, source, build)
 
     # crash-recovery replay of batch 0 on EVERY run: recognized,
     # skipped, log untouched — the exactly-once contract, in-protocol
@@ -1759,7 +1750,7 @@ def ann_index_compaction(spark: SparkSession, sf_dir: str) -> DataFrame:
     way after absorbing update batches."""
     import os
 
-    from kamiyo_hive_spark.sources.sinks import SCRATCH, ensure_staging
+    from kamiyo_hive_spark.sources.sinks import SCRATCH, ensure_txlog
     from kamiyo_hive_spark.sources.txlog import (
         TxLog,
         optimize_partitioned,
@@ -1785,8 +1776,7 @@ def ann_index_compaction(spark: SparkSession, sf_dir: str) -> DataFrame:
             by.setdefault(b, []).append(f)
         return by
 
-    def build(tmp: str) -> None:
-        log = TxLog.init(tmp)
+    def build(log: TxLog) -> None:
         e = table(spark, sf_dir, "embeddings")
         base = e.filter(
             F.pmod(F.col("vec_id"), F.lit(ANN_UPSERT_MOD)) != ANN_UPSERT_RES
@@ -1814,7 +1804,7 @@ def ann_index_compaction(spark: SparkSession, sf_dir: str) -> DataFrame:
         if not any(len(fs) > 1 for fs in before.values()):
             raise RuntimeError("ingest produced no fragmentation to compact")
         healthy = {
-            fs[0]: os.stat(os.path.join(tmp, fs[0])).st_ino
+            fs[0]: os.stat(os.path.join(log.root, fs[0])).st_ino
             for fs in before.values()
             if len(fs) == 1
         }
@@ -1831,14 +1821,12 @@ def ann_index_compaction(spark: SparkSession, sf_dir: str) -> DataFrame:
         for f, ino in healthy.items():
             if f not in live or f in touched:
                 raise RuntimeError(f"healthy bucket file was rewritten: {f}")
-            if os.stat(os.path.join(tmp, f)).st_ino != ino:
+            if os.stat(os.path.join(log.root, f)).st_ino != ino:
                 raise RuntimeError(f"healthy bucket file changed inode: {f}")
         if vacuum(log, retain_versions=1, retain_seconds=0.0) < 1:
             raise RuntimeError("vacuum collected no fragments")
-        open(os.path.join(tmp, "_SUCCESS"), "w").close()
 
-    root = ensure_staging(out_root, source, build)
-    log = TxLog(root)
+    log = ensure_txlog(out_root, source, build)
     n_versions = log.version() + 1
     max_files = max(len(fs) for fs in per_bucket_files(log).values())
 

@@ -297,7 +297,9 @@ def nation_product_profit(spark: SparkSession, sf_dir: str) -> DataFrame:
     # 60%-of-retail cost is 60 × retail_cents × qty_cents, scale
     # 2+2+2=6), so the long sum is the exact scale-6 total. Capacity:
     # largest |group sum| measured at sf0.1 is 2.4e13 scale-6 units —
-    # 381× under 2^53 (bound + guard in money.py).
+    # 381× under 2^53 (bound in money.py). SPARK_GRAFT_MONEY_GUARD does
+    # NOT cover this inline sum: it guards only money_sum, rev_sum and
+    # money_sum_col.
     profit_units = rev_units() * F.lit(100).cast("long") - (
         F.lit(60).cast("long") * cents("p_retailprice") * cents("l_quantity")
     )

@@ -46,6 +46,7 @@ def get_spark(
       skew-join splitting replace hand-tuned plans at any scale factor.
     - Session timezone pinned to UTC so event-time semantics match the
       DuckDB oracle (naive-UTC timestamps) bit-for-bit.
+    - ANSI mode pinned on: long overflow fails loudly, never wraps.
     - Arrow enabled for every pandas interchange (toPandas, pandas UDFs).
     - Opt-in persistent metastore: ``SPARK_GRAFT_HIVE=1`` enables Hive
       support over a local Derby metastore (path pinned by
@@ -76,6 +77,10 @@ def get_spark(
         .config("spark.sql.adaptive.coalescePartitions.parallelismFirst", "false")
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
         .config("spark.sql.session.timeZone", "UTC")
+        # ANSI arithmetic (the Spark 4 default, pinned so a flipped
+        # cluster default cannot change it): an integer sub-unit money
+        # sum past 2^63 raises ARITHMETIC_OVERFLOW instead of wrapping.
+        .config("spark.sql.ansi.enabled", "true")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "16g"))
         .config("spark.ui.enabled", "false")

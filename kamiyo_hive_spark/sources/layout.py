@@ -1,5 +1,6 @@
 """Physical-layout operators: z-order data skipping + snapshot
-time-travel with incremental reads.
+time-travel with incremental reads, both over one :class:`TxLog` table
+each, plus the CSV, ORC and schema-evolution ingest reads.
 
 Two levers that matter more at 100 TB than any single query plan:
 
@@ -7,46 +8,43 @@ Two levers that matter more at 100 TB than any single query plan:
   partition on ONE key gives perfect skipping on that key and none on
   any other; interleaving the bits of two keys (Morton / z-order)
   gives both dimensions locality, so per-file min/max statistics prune
-  most files for a 2-D box predicate. This is the Delta/Iceberg
-  OPTIMIZE ZORDER shape, expressed Spark-first: quantile-bucket both
-  keys, interleave bits with JVM expressions, `repartitionByRange` on
-  the z-value, write; the layout must be semantically invisible (the
-  oracle computes the same box aggregate straight from the source —
-  the `salted_hot_key_rollup` "re-layout changes nothing" contract).
+  most files for a 2-D box predicate. The table is re-clustered by one
+  ``zorder_optimize`` commit (the Delta/Iceberg OPTIMIZE ZORDER shape)
+  whose per-file stats then prune the scan from the manifest alone;
+  the layout must be semantically invisible (the oracle computes the
+  same box aggregate straight from the source).
 
-- ``snapshot_time_travel`` — manifest-based snapshot isolation over
-  plain parquet: every version is a list of immutable files; appends
-  create a new manifest, never touch old files. Time-travel = read an
-  old manifest; incremental processing = read only the file DELTA
-  between two manifests. The query proves the algebra the lakehouse
-  depends on: agg(v1) + agg(increment) == agg(v2), per group.
-  (Delta/Iceberg jars aren't in this image; the manifest layer here is
-  ~20 lines because the hard part — immutable files + versioned file
-  lists — is a layout discipline, not a library.)
+- ``snapshot_time_travel`` — snapshot isolation over immutable files:
+  every version is a committed file list; appends add files, never
+  touch old ones. Time travel = read an old version; incremental
+  processing = read only the change feed between two versions. The
+  query proves the algebra the lakehouse depends on:
+  agg(v1) + agg(increment) == agg(v2), per group.
 """
 
 from __future__ import annotations
 
-import json
 import os
 
-from pyspark.sql import Column, DataFrame, SparkSession
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from kamiyo_hive_spark.catalog import table
-from kamiyo_hive_spark.functions.money import cents, dec, money_sum, money_sum_col
+from kamiyo_hive_spark.functions.money import money_sum_col
 from kamiyo_hive_spark.plans.registry import register
-from kamiyo_hive_spark.sources.sinks import (
-    SCRATCH,
-    ensure_staging,
-)
+from kamiyo_hive_spark.sources import txlog
+from kamiyo_hive_spark.sources.sinks import SCRATCH, ensure_staging, ensure_txlog
+from kamiyo_hive_spark.sources.txlog import TxLog
 
 # ---------------------------------------------------------------------------
 # Z-order layout
 # ---------------------------------------------------------------------------
 
-Z_BITS = 12          # bits per dimension (4096 quantile buckets each)
 Z_FILES = 8          # output files; each covers one contiguous z-range
+# Morton column order: the LAST column owns the most-significant
+# interleave bit, so the box's narrower key (l_partkey, 15% of its
+# range) splits the files first and prunes them on its own.
+Z_COLS = ("l_suppkey", "l_partkey")
 # 2-D box predicate used by the scan, as percent-of-key-range bounds so
 # the same query is non-vacuous at every scale factor (key domains grow
 # with sf). Bounds resolve to integers identically on both engines:
@@ -55,76 +53,30 @@ Z_BOX_PART_PCT = (5, 20)
 Z_BOX_SUPP_PCT = (10, 40)
 
 
-def zvalue(x_bucket: Column, y_bucket: Column, bits: int = Z_BITS) -> Column:
-    """Morton interleave of two bucket ids (JVM bitwise expressions —
-    whole-stage codegen, no UDF): bit i of x lands at 2i, of y at
-    2i+1."""
-    z = F.lit(0).cast("long")
-    for i in range(bits):
-        z = (
-            z.bitwiseOR(F.shiftleft(F.shiftright(x_bucket, i).bitwiseAND(F.lit(1)), 2 * i))
-            .bitwiseOR(
-                F.shiftleft(F.shiftright(y_bucket, i).bitwiseAND(F.lit(1)), 2 * i + 1)
-            )
-        )
-    return z
-
-
-def _bucket(col: Column, cmin: Column, cmax: Column, bits: int = Z_BITS) -> Column:
-    """Order-preserving quantization of a key into 2^bits buckets using
-    the column's global [min, max] — the bounded representation z-order
-    needs (raw keys would overflow the bit budget at lake scale)."""
-    n = 1 << bits
-    return F.least(
-        F.lit(n - 1),
-        F.floor((col - cmin) * n / (cmax - cmin + 1)).cast("long"),
-    )
-
-
-def write_zordered(spark: SparkSession, sf_dir: str) -> str:
-    """Stage lineitem z-ordered on (l_partkey, l_suppkey): bucket both
-    keys by global min/max (one metadata-sized agg, broadcast), Morton-
-    interleave, range-partition on the z-value, sort within partitions
-    so parquet row groups get tight min/max stats on BOTH keys.
+def zorder_log(spark: SparkSession, sf_dir: str) -> TxLog:
+    """Stage lineitem as a txlog table re-clustered by one
+    ``zorder_optimize`` commit over ``Z_COLS``; the rewrite records
+    per-file [min, max] of both keys in the commit.
 
     Fingerprint-cached per sf_dir: clustering is an offline table-
     maintenance job (OPTIMIZE ZORDER), amortized across every query
-    that reads the layout — the same accounting as the IVF index
-    build. A source regeneration invalidates and rebuilds."""
-    out = os.path.join(SCRATCH, f"lineitem_zorder_{os.path.basename(sf_dir)}")
-    source = os.path.join(sf_dir, "lineitem.parquet")
+    that reads the layout. A source regeneration invalidates and
+    rebuilds."""
 
-    def build(tmp: str) -> None:
-        li = table(spark, sf_dir, "lineitem").select(
-            "l_orderkey", "l_partkey", "l_suppkey", "l_quantity", "l_extendedprice"
+    def build(log: TxLog) -> None:
+        log.append(
+            table(spark, sf_dir, "lineitem").select(
+                "l_orderkey", "l_partkey", "l_suppkey", "l_quantity", "l_extendedprice"
+            ),
+            writer="ingest",
         )
-        rng = li.agg(
-            F.min("l_partkey").alias("pmin"),
-            F.max("l_partkey").alias("pmax"),
-            F.min("l_suppkey").alias("smin"),
-            F.max("l_suppkey").alias("smax"),
-        )
-        z = zvalue(
-            _bucket(F.col("l_partkey"), F.col("pmin"), F.col("pmax")),
-            _bucket(F.col("l_suppkey"), F.col("smin"), F.col("smax")),
-        )
-        (
-            li.crossJoin(F.broadcast(rng))
-            .withColumn("zval", z)
-            .repartitionByRange(Z_FILES, "zval")
-            .sortWithinPartitions("zval")
-            .drop("zval", "pmin", "pmax", "smin", "smax")
-            .write.mode("overwrite")
-            .parquet(tmp)
-        )
-        # persist the key ranges with the layout: box_bounds() reads them
-        # back instead of re-scanning lineitem on every query (the stats a
-        # real table format keeps in its metadata)
-        r = rng.collect()[0]
-        with open(os.path.join(tmp, "_KEY_RANGES.json"), "w") as fh:
-            json.dump({k: int(r[k]) for k in ("pmin", "pmax", "smin", "smax")}, fh)
+        txlog.zorder_optimize(log, spark, Z_COLS, target_files=Z_FILES)
 
-    return ensure_staging(out, source, build)
+    return ensure_txlog(
+        os.path.join(SCRATCH, f"txlog_lineitem_zorder_{os.path.basename(sf_dir)}"),
+        os.path.join(sf_dir, "lineitem.parquet"),
+        build,
+    )
 
 
 _ZORDER_ORACLE = f"""
@@ -149,39 +101,31 @@ WHERE l_partkey BETWEEN box.plo AND box.phi
 """
 
 
-def box_bounds(spark: SparkSession, sf_dir: str) -> tuple[int, int, int, int]:
-    """Resolve the percent-of-range box to integer bounds (plo, phi,
-    slo, shi) from the key ranges the layout build persisted — no
-    re-scan; same floor-division arithmetic as the oracle."""
-    zdir = write_zordered(spark, sf_dir)
-    with open(os.path.join(zdir, "_KEY_RANGES.json")) as fh:
-        r = json.load(fh)
-    plo = r["pmin"] + (r["pmax"] - r["pmin"]) * Z_BOX_PART_PCT[0] // 100
-    phi = r["pmin"] + (r["pmax"] - r["pmin"]) * Z_BOX_PART_PCT[1] // 100
-    slo = r["smin"] + (r["smax"] - r["smin"]) * Z_BOX_SUPP_PCT[0] // 100
-    shi = r["smin"] + (r["smax"] - r["smin"]) * Z_BOX_SUPP_PCT[1] // 100
-    return int(plo), int(phi), int(slo), int(shi)
-
-
 @register(
     "zorder_layout_scan",
     oracle=_ZORDER_ORACLE,
     tags=("layout", "zorder", "data-skipping"),
 )
 def zorder_layout_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Z-order lineitem on (l_partkey, l_suppkey), then answer a 2-D box
-    query from the re-laid-out files. The oracle computes the same box
-    straight from the source: clustering must be semantically
-    invisible. Box bounds are resolved to integer LITERALS first (one
-    metadata-sized agg — the `cosine_topk` query-vector pattern) so
-    the reread filter reaches the parquet scan as PushedFilters and
-    row-group min/max stats actually prune. The payoff is physical,
-    not logical — the z-layout skips files a 1-D layout can't
-    (measured in tests/test_layout.py) — so this query's scan touches
-    a fraction of the table at any scale."""
-    out = write_zordered(spark, sf_dir)
-    plo, phi, slo, shi = box_bounds(spark, sf_dir)
-    reread = spark.read.parquet(out).filter(
+    """Answer a 2-D box query over lineitem z-ordered on (l_partkey,
+    l_suppkey). The oracle computes the same box straight from the
+    source: clustering must be semantically invisible. The box bounds
+    are integer literals from the log's per-file stats (each key's
+    global min/max, no data scan); the file list is pruned on l_partkey
+    from the manifest alone, and the row filter on both keys still
+    reaches the parquet scan as PushedFilters, so at any scale the scan
+    touches a fraction of the table."""
+    log = zorder_log(spark, sf_dir)
+    stats = log.file_stats().values()
+
+    def box(col: str, pct: tuple[int, int]) -> tuple[int, int]:
+        lo = min(s[col][0] for s in stats)
+        hi = max(s[col][1] for s in stats)
+        return lo + (hi - lo) * pct[0] // 100, lo + (hi - lo) * pct[1] // 100
+
+    plo, phi = box("l_partkey", Z_BOX_PART_PCT)
+    slo, shi = box("l_suppkey", Z_BOX_SUPP_PCT)
+    reread = log.read_stats_pruned(spark, "l_partkey", plo, phi).filter(
         F.col("l_partkey").between(plo, phi) & F.col("l_suppkey").between(slo, shi)
     )
     return reread.agg(
@@ -198,66 +142,26 @@ def zorder_layout_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
 SNAPSHOT_CUTOVER = "1997-01-01 00:00:00"  # v1 = orders before, v2 adds the rest
 
 
-def build_snapshots(spark: SparkSession, sf_dir: str) -> str:
-    """Build a two-version manifest table: v1 = historical orders, v2 =
-    v1's files (untouched) + an appended increment. Append-only +
-    immutable files is the entire isolation story: readers of v1 can
-    never see v2's rows because v2 never rewrote a v1 file.
-    Fingerprint-cached per sf_dir (the table build is ingest, not the
-    query; a source regeneration invalidates it)."""
-    root = os.path.join(SCRATCH, f"orders_snapshots_{os.path.basename(sf_dir)}")
-    source = os.path.join(sf_dir, "orders.parquet")
+def snapshot_log(spark: SparkSession, sf_dir: str) -> TxLog:
+    """Stage a two-commit txlog table: version 0 (the query's v1) =
+    historical orders, version 1 (v2) = an appended increment that
+    never rewrote a version-0 file, so readers of version 0 can never
+    see its rows. Fingerprint-cached per sf_dir (the table build is
+    ingest, not the query; a source regeneration invalidates it)."""
 
-    def build(tmp: str) -> None:
+    def build(log: TxLog) -> None:
         o = table(spark, sf_dir, "orders").select(
             "o_orderkey", "o_orderstatus", "o_orderdate", "o_totalprice"
         )
         cut = F.lit(SNAPSHOT_CUTOVER).cast("timestamp")
-        base_dir, inc_dir = os.path.join(tmp, "batch1"), os.path.join(tmp, "batch2")
-        o.filter(F.col("o_orderdate") < cut).write.mode("overwrite").parquet(base_dir)
-        o.filter(F.col("o_orderdate") >= cut).write.mode("overwrite").parquet(inc_dir)
+        log.append(o.filter(F.col("o_orderdate") < cut), writer="history")
+        log.append(o.filter(F.col("o_orderdate") >= cut), writer="increment")
 
-        # Manifests pin files RELATIVE to the table root: the build dir
-        # is atomically renamed into place (and a real lake moves/copies
-        # table roots), so absolute paths would dangle.
-        def data_files(batch: str) -> list[str]:
-            d = os.path.join(tmp, batch)
-            return sorted(
-                f"{batch}/{f}" for f in os.listdir(d) if f.endswith(".parquet")
-            )
-
-        manifests = {
-            "v1": data_files("batch1"),
-            "v2": data_files("batch1") + data_files("batch2"),
-        }
-        for v, files in manifests.items():
-            with open(os.path.join(tmp, f"manifest_{v}.json"), "w") as fh:
-                json.dump({"version": v, "files": files}, fh)
-        open(os.path.join(tmp, "_SUCCESS"), "w").close()
-
-    return ensure_staging(root, source, build)
-
-
-def _manifest_files(root: str, version: str) -> list[str]:
-    """Resolve a manifest's root-relative file list to absolute paths
-    (absolute entries from pre-r4 manifests still resolve unchanged)."""
-    with open(os.path.join(root, f"manifest_{version}.json")) as fh:
-        files = json.load(fh)["files"]
-    return [f if os.path.isabs(f) else os.path.join(root, f) for f in files]
-
-
-def read_snapshot(spark: SparkSession, root: str, version: str) -> DataFrame:
-    """Time-travel read: exactly the files the manifest pinned."""
-    return spark.read.parquet(*_manifest_files(root, version))
-
-
-def read_increment(spark: SparkSession, root: str, v_from: str, v_to: str) -> DataFrame:
-    """Incremental read: only files added between two snapshots — the
-    primitive that turns full recomputes into delta processing."""
-    old = set(_manifest_files(root, v_from))
-    new = _manifest_files(root, v_to)
-    added = [f for f in new if f not in old]
-    return spark.read.parquet(*added)
+    return ensure_txlog(
+        os.path.join(SCRATCH, f"txlog_orders_snapshots_{os.path.basename(sf_dir)}"),
+        os.path.join(sf_dir, "orders.parquet"),
+        build,
+    )
 
 
 _SNAPSHOT_ORACLE = f"""
@@ -289,51 +193,29 @@ ORDER BY o_orderstatus
     tags=("layout", "snapshot", "time-travel", "incremental"),
 )
 def snapshot_time_travel(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Manifest-based snapshot reads: per-status rows at v1, rows in
-    the v1→v2 increment, and the v2 totals — computed from the v1
-    manifest read + the INCREMENT-ONLY read (v2's totals are derived
-    as v1 + delta, never by re-scanning v1's files; the oracle
-    recomputes everything from the source table, so the manifest
-    plumbing and the incremental algebra are both hash-checked).
+    """Snapshot reads: per-status rows at v1, rows in the v1→v2
+    increment, and the v2 totals — computed from a time-travel read of
+    version 0 plus the version 0→1 change feed (v2 is derived as v1 +
+    delta, never by reading version 1's snapshot; the oracle recomputes
+    everything from the source table, so the time travel and the
+    incremental algebra are both hash-checked).
 
     At 100 TB this is the difference between a nightly full recompute
-    and touching only the day's appended files; the manifest is
-    metadata-sized and the file delta is the only data read."""
-    root = build_snapshots(spark, sf_dir)
-    # Snapshot + increment partials as integer sub-units (r11, guide
-    # §2.3): long partials compose exactly in the v1+delta algebra,
-    # without a decimal accumulator on either read.
-    v1 = (
-        read_snapshot(spark, root, "v1")
+    and touching only the day's appended files; resolving the versions
+    is metadata-sized and the change feed reads only the added files."""
+    log = snapshot_log(spark, sf_dir)
+    cols = ("o_orderstatus", "o_totalprice")
+    v1 = log.read(spark, version=0).select(*cols, F.lit(True).alias("in_v1"))
+    inc = txlog.read_changes(log, spark, 0, 1).select(*cols, F.lit(False).alias("in_v1"))
+    return (
+        v1.unionByName(inc)
         .groupBy("o_orderstatus")
         .agg(
-            F.count("*").alias("v1_rows"),
-            F.sum(cents("o_totalprice")).alias("v1_tpc"),
+            F.count(F.when(F.col("in_v1"), 1)).alias("v1_rows"),
+            F.count(F.when(~F.col("in_v1"), 1)).alias("inc_rows"),
+            F.count("*").alias("v2_rows"),
+            money_sum_col("o_totalprice").alias("v2_total_price"),
         )
-    )
-    inc = (
-        read_increment(spark, root, "v1", "v2")
-        .groupBy("o_orderstatus")
-        .agg(
-            F.count("*").alias("inc_rows"),
-            F.sum(cents("o_totalprice")).alias("inc_tpc"),
-        )
-    )
-    joined = v1.join(inc, "o_orderstatus", "full_outer")
-    zero = F.lit(0).cast("long")
-    return joined.select(
-        "o_orderstatus",
-        F.coalesce("v1_rows", F.lit(0)).cast("long").alias("v1_rows"),
-        F.coalesce("inc_rows", F.lit(0)).cast("long").alias("inc_rows"),
-        (F.coalesce("v1_rows", F.lit(0)) + F.coalesce("inc_rows", F.lit(0)))
-        .cast("long")
-        .alias("v2_rows"),
-        (
-            (F.coalesce(F.col("v1_tpc"), zero) + F.coalesce(F.col("inc_tpc"), zero))
-            / 100.0
-        )
-        .cast("double")
-        .alias("v2_total_price"),
     )
 
 

@@ -1,122 +1,84 @@
-"""Table-maintenance operators: targeted delete (right-to-be-forgotten)
-and small-file compaction.
+"""Table-maintenance operators over :class:`TxLog` tables: targeted
+delete (right-to-be-forgotten), keyed update and small-file compaction.
 
-The two background jobs every parquet lake runs forever:
+The background jobs every parquet lake runs forever:
 
-- ``targeted_delete_rewrite`` — DELETE WHERE key IN (...) over immutable
-  files. You cannot edit parquet in place; the correct shape is to
-  find the files that CONTAIN matching rows (file-level pruning — at
-  scale via file stats/bloom indexes, here via an input_file_name
-  semi-join), rewrite only those files minus the doomed rows, and keep
-  every untouched file byte-identical. Touching 1% of files for a
-  1%-selective delete is the entire difference between a GDPR erasure
-  sweep that takes minutes and one that rewrites 100 TB.
+- ``targeted_delete_rewrite`` / ``keyed_update_rewrite`` — DELETE or
+  UPDATE WHERE key IN (...) over immutable files. You cannot edit
+  parquet in place; the correct shape is to find the files that
+  CONTAIN matching rows, rewrite only those, and keep every untouched
+  file byte-identical. Both run as ``TxLog.clone`` (hard links) plus
+  ``rewrite_where`` — one copy-on-write path. Touching 1% of files for
+  a 1%-selective delete is the entire difference between a GDPR
+  erasure sweep that takes minutes and one that rewrites 100 TB.
+  (Deletion-vector deletes, which rewrite no data file, are
+  ``acid_deletion_vectors``.)
 
 - ``small_file_compaction`` — streaming ingest and partitioned writes
   strand thousands of KB-sized files; scans then pay per-file open
-  costs and lose row-group pruning. Compaction bin-packs them into
-  size-targeted files. It must be a pure re-layout: the oracle
-  computes from the ORIGINAL source, so the hash proves compaction
-  changed nothing but the file boundaries.
+  costs and lose row-group pruning. ``optimize`` bin-packs them into
+  a few files in one rewrite commit. It must be a pure re-layout: the
+  oracle computes from the ORIGINAL source, so the hash proves
+  compaction changed nothing but the file boundaries.
 """
 
 from __future__ import annotations
 
 import os
-from urllib.parse import unquote
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from kamiyo_hive_spark.catalog import table
-from kamiyo_hive_spark.functions.money import dec, money_sum, money_sum_col
+from kamiyo_hive_spark.functions.money import dec, money_sum_col
 from kamiyo_hive_spark.plans.registry import register
-from kamiyo_hive_spark.sources.sinks import (
-    SCRATCH,
-    ensure_staging,
-    fresh_staging,
-)
+from kamiyo_hive_spark.sources import txlog
+from kamiyo_hive_spark.sources.sinks import SCRATCH, ensure_txlog, fresh_staging
+from kamiyo_hive_spark.sources.txlog import TxLog
+
 
 # ---------------------------------------------------------------------------
-# Targeted delete
+# Targeted delete / keyed update: copy-on-write through the log
 # ---------------------------------------------------------------------------
 
 DELETE_POOL_FILES = 64       # file pool: range-partitioned by custkey.
-                             # 64 (not 16) so the every-97th-custkey
-                             # target set leaves files untouched at
-                             # every sf — with 16 files at sf0.1 all
-                             # ranges contain a target and the pruning
-                             # story would be vacuous.
+                             # The every-97th-custkey target set then
+                             # leaves files untouched at sf0.001 (62 of
+                             # 64) and sf0.01 (48); at sf0.1 every
+                             # range holds a target and all 64 files
+                             # are rewritten.
 DELETE_KEY_MOD = 97          # forget customers with custkey % 97 == 0
 
 
-def delete_pool_dir(spark: SparkSession, sf_dir: str) -> str:
-    """Stage orders as a custkey-range-partitioned file pool — the
-    layout under which a keyed delete is file-prunable (each custkey
-    lives in exactly one file's range). Fingerprint-cached per sf_dir."""
-    out = os.path.join(SCRATCH, f"orders_delete_pool_{os.path.basename(sf_dir)}")
-    source = os.path.join(sf_dir, "orders.parquet")
-    return ensure_staging(
-        out,
-        source,
-        lambda tmp: table(spark, sf_dir, "orders")
-        .select("o_orderkey", "o_custkey", "o_orderstatus", "o_totalprice")
-        .repartitionByRange(DELETE_POOL_FILES, "o_custkey")
-        .sortWithinPartitions("o_custkey")
-        .write.mode("overwrite")
-        .parquet(tmp),
+def delete_pool_log(spark: SparkSession, sf_dir: str) -> TxLog:
+    """Orders as a txlog table of custkey-ranged files — the layout
+    under which a keyed delete or update touches few files (each
+    custkey lives in exactly one file's range)."""
+    return ensure_txlog(
+        os.path.join(SCRATCH, f"txlog_orders_pool_{os.path.basename(sf_dir)}"),
+        os.path.join(sf_dir, "orders.parquet"),
+        lambda log: log.append(
+            table(spark, sf_dir, "orders")
+            .select("o_orderkey", "o_custkey", "o_orderstatus", "o_totalprice")
+            .repartitionByRange(DELETE_POOL_FILES, "o_custkey")
+            .sortWithinPartitions("o_custkey"),
+            writer="ingest",
+        ),
     )
 
 
-def rewrite_matching_files(
-    spark: SparkSession, pool: str, out: str, pred, rewrite
-) -> tuple[int, int]:
-    """The copy-on-write DML core shared by DELETE and UPDATE: find the
-    files containing rows matching `pred` (file-level pruning via an
-    input_file_name probe — at lake scale a file-stats / bloom-index
-    lookup, not a scan), hard-link every untouched file byte-identical,
-    and write `rewrite(affected_rows_df)` as the replacement for the
-    affected files. Returns (n_files_total, n_files_rewritten)."""
-    pooled = spark.read.parquet(pool)
-    # input_file_name() yields a percent-encoded file URI; decode the
-    # basename before comparing against os.listdir output or a file
-    # name with encodable characters silently counts as "untouched"
-    # and its doomed rows survive the rewrite (ADVICE r2).
-    affected = {
-        unquote(r["f"].split("/")[-1])
-        for r in pooled.filter(pred)
-        .select(F.input_file_name().alias("f"))
-        .distinct()
-        .collect()
-    }
-    all_files = sorted(f for f in os.listdir(pool) if f.endswith(".parquet"))
-
-    def build(tmp: str) -> None:
-        os.makedirs(tmp)
-        for f in all_files:
-            if f not in affected:
-                os.link(os.path.join(pool, f), os.path.join(tmp, f))
-        if affected:
-            rows = spark.read.parquet(
-                *[os.path.join(pool, f) for f in sorted(affected)]
-            )
-            rewrite(rows).write.mode("append").parquet(tmp)
-
-    fresh_staging(out, build)
-    return len(all_files), len(affected)
-
-
-def targeted_delete(spark: SparkSession, sf_dir: str) -> tuple[str, int, int]:
-    """Execute the delete: returns (result_dir, n_files_total,
-    n_files_rewritten). Result dir contains hard links of untouched
-    files plus rewritten survivors of affected files."""
-    pool = delete_pool_dir(spark, sf_dir)
-    out = os.path.join(SCRATCH, f"orders_post_delete_{os.path.basename(sf_dir)}")
-    doomed = F.col("o_custkey") % DELETE_KEY_MOD == 0
-    n_total, n_rewritten = rewrite_matching_files(
-        spark, pool, out, doomed, lambda rows: rows.filter(~doomed)
-    )
-    return out, n_total, n_rewritten
+def rewrite_pool(spark: SparkSession, sf_dir: str, op: str, pred, transform) -> TxLog:
+    """One copy-on-write DML run over the staged pool, shared by DELETE
+    and UPDATE: clone the pool (version 0, every file a hard link of
+    the staged one), then ``rewrite_where`` rewrites only the files
+    holding rows matching ``pred`` as ``transform(rows)`` (version 1).
+    Runs inside a fresh-staging swap, so a concurrent session never
+    reads a half-built table."""
+    pool = delete_pool_log(spark, sf_dir)
+    out = os.path.join(SCRATCH, f"txlog_orders_{op}_{os.path.basename(sf_dir)}")
+    return TxLog(fresh_staging(
+        out, lambda tmp: pool.clone(tmp).rewrite_where(spark, pred, transform, writer=op)
+    ))
 
 
 _DELETE_ORACLE = f"""
@@ -138,27 +100,26 @@ ORDER BY o_orderstatus
     tags=("maintenance", "delete", "gdpr"),
 )
 def targeted_delete_rewrite(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Right-to-be-forgotten DELETE over immutable parquet: find the
-    files containing target customers (file-level pruning via an
-    input_file_name probe standing in for a file-stats index), rewrite
-    only those files without the doomed rows, hard-link every
-    untouched file unchanged, then aggregate the post-delete table.
-    The oracle computes the same aggregate as a plain anti-filter on
-    the source — the hash proves the delete removed exactly the target
-    rows and nothing else. `n_leftover_targets` is pinned to 0 by both
-    sides (the erasure actually happened). File-touch accounting is
-    unit-tested (tests/test_maintenance.py): untouched files must be
-    the SAME inodes, and rewrites must touch a strict subset."""
-    out, _, _ = targeted_delete(spark, sf_dir)
-    post = spark.read.parquet(out)
+    """Right-to-be-forgotten DELETE over immutable parquet: rewrite only
+    the pool files containing target customers, without the doomed
+    rows; every untouched file stays the staged pool's inode. Then
+    aggregate the post-delete snapshot. The oracle computes the same
+    aggregate as a plain anti-filter on the source — the hash proves
+    the delete removed exactly the target rows and nothing else.
+    `n_leftover_targets` is pinned to 0 by both sides (the erasure
+    actually happened). File-touch accounting is unit-tested
+    (tests/test_maintenance.py): untouched files must be the SAME
+    inodes, and rewrites must touch a strict subset."""
+    doomed = F.col("o_custkey") % DELETE_KEY_MOD == 0
+    post = rewrite_pool(
+        spark, sf_dir, "delete", doomed, lambda rows: rows.filter(~doomed)
+    ).read(spark)
     return (
         post.groupBy("o_orderstatus")
         .agg(
             F.count("*").alias("n_rows"),
             money_sum_col("o_totalprice").alias("total_price"),
-            F.sum(
-                F.when(F.col("o_custkey") % DELETE_KEY_MOD == 0, 1).otherwise(0)
-            )
+            F.sum(F.when(doomed, 1).otherwise(0))
             .cast("long")
             .alias("n_leftover_targets"),
         )
@@ -173,36 +134,26 @@ FRAGMENT_FILES = 64   # the strand-of-small-files starting state
 COMPACT_FILES = 4     # target after bin-packing
 
 
-def fragmented_dir(spark: SparkSession, sf_dir: str) -> str:
-    """Stage lineitem shattered into 64 files — the post-streaming-
-    ingest pathology. Fingerprint-cached per sf_dir."""
-    out = os.path.join(SCRATCH, f"lineitem_fragments_{os.path.basename(sf_dir)}")
-    source = os.path.join(sf_dir, "lineitem.parquet")
-    return ensure_staging(
-        out,
-        source,
-        lambda tmp: table(spark, sf_dir, "lineitem")
-        .select("l_orderkey", "l_linenumber", "l_quantity", "l_extendedprice")
-        .repartition(FRAGMENT_FILES)
-        .write.mode("overwrite")
-        .parquet(tmp),
+def compacted_log(spark: SparkSession, sf_dir: str) -> TxLog:
+    """Lineitem shattered into 64 files (the post-streaming-ingest
+    pathology, staged once), cloned and compacted to ``COMPACT_FILES``
+    by one ``optimize`` commit. Version 0 of the returned table is the
+    fragment pool, version 1 the compacted layout."""
+    frags = ensure_txlog(
+        os.path.join(SCRATCH, f"txlog_lineitem_fragments_{os.path.basename(sf_dir)}"),
+        os.path.join(sf_dir, "lineitem.parquet"),
+        lambda log: log.append(
+            table(spark, sf_dir, "lineitem")
+            .select("l_orderkey", "l_linenumber", "l_quantity", "l_extendedprice")
+            .repartition(FRAGMENT_FILES),
+            writer="ingest",
+        ),
     )
-
-
-def compact(spark: SparkSession, sf_dir: str) -> str:
-    """Compact the fragment pool into COMPACT_FILES range-partitioned,
-    internally sorted files (bin-pack + re-cluster in one pass — real
-    compactors fold a sort in since they're rewriting anyway)."""
-    frags = fragmented_dir(spark, sf_dir)
-    out = os.path.join(SCRATCH, f"lineitem_compacted_{os.path.basename(sf_dir)}")
-    return fresh_staging(
+    out = os.path.join(SCRATCH, f"txlog_lineitem_compacted_{os.path.basename(sf_dir)}")
+    return TxLog(fresh_staging(
         out,
-        lambda tmp: spark.read.parquet(frags)
-        .repartitionByRange(COMPACT_FILES, "l_orderkey", "l_linenumber")
-        .sortWithinPartitions("l_orderkey", "l_linenumber")
-        .write.mode("overwrite")
-        .parquet(tmp),
-    )
+        lambda tmp: txlog.optimize(frags.clone(tmp), spark, target_files=COMPACT_FILES),
+    ))
 
 
 _COMPACT_ORACLE = """
@@ -221,17 +172,14 @@ FROM lineitem
     tags=("maintenance", "compaction"),
 )
 def small_file_compaction(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Bin-pack 64 ingest fragments into 4 range-clustered files and
-    aggregate the compacted table. The oracle computes from the
-    ORIGINAL lineitem source — two layout hops away — so the hash
-    proves compaction is a pure re-layout (no row lost, duplicated, or
-    altered). File-count reduction and per-file ordering are
-    unit-tested. At 100 TB this is the nightly OPTIMIZE job: the scan
-    cost of the fragment pool is per-file opens; the compacted layout
-    restores row-group pruning and sequential reads."""
-    out = compact(spark, sf_dir)
-    comp = spark.read.parquet(out)
-    return comp.agg(
+    """Bin-pack 64 ingest fragments into 4 files and aggregate the
+    compacted table. The oracle computes from the ORIGINAL lineitem
+    source — two layout hops away — so the hash proves compaction is a
+    pure re-layout (no row lost, duplicated, or altered). The file-count
+    reduction is unit-tested. At 100 TB this is the nightly OPTIMIZE
+    job: the scan cost of the fragment pool is per-file opens; the
+    compacted layout restores sequential reads."""
+    return compacted_log(spark, sf_dir).read(spark).agg(
         F.count("*").alias("n_rows"),
         money_sum_col("l_quantity").alias("total_qty"),
         money_sum_col("l_extendedprice").alias("total_price"),
@@ -246,25 +194,6 @@ def small_file_compaction(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 UPDATE_KEY_MOD = 131    # customers getting a price adjustment
 UPDATE_BUMP = "25.00"   # exact decimal bump applied to their orders
-
-
-def keyed_update(spark: SparkSession, sf_dir: str) -> tuple[str, int, int]:
-    """Execute the update (mirrors `targeted_delete`): returns
-    (result_dir, n_files_total, n_files_rewritten)."""
-    pool = delete_pool_dir(spark, sf_dir)
-    out = os.path.join(SCRATCH, f"orders_post_update_{os.path.basename(sf_dir)}")
-    hit = F.col("o_custkey") % UPDATE_KEY_MOD == 0
-    bump = (
-        dec("o_totalprice") + F.lit(UPDATE_BUMP).cast("decimal(14,2)")
-    ).cast("double")
-
-    def apply_update(rows: DataFrame) -> DataFrame:
-        return rows.withColumn(
-            "o_totalprice", F.when(hit, bump).otherwise(F.col("o_totalprice"))
-        )
-
-    n_total, n_rewritten = rewrite_matching_files(spark, pool, out, hit, apply_update)
-    return out, n_total, n_rewritten
 
 
 @register(
@@ -288,16 +217,26 @@ def keyed_update(spark: SparkSession, sf_dir: str) -> tuple[str, int, int]:
 def keyed_update_rewrite(spark: SparkSession, sf_dir: str) -> DataFrame:
     """UPDATE WHERE key IN (...) over immutable parquet — the third leg
     of the DML triad (append = `snapshot_time_travel`, delete =
-    `targeted_delete_rewrite`): the same copy-on-write core finds the
-    files containing target customers, rewrites ONLY those files with
-    the price adjustment applied (exact DECIMAL arithmetic — money
-    never transits double during the update), and hard-links every
-    untouched file byte-identical. Row count must be conserved (an
-    update never adds or drops rows) and the oracle recomputes the
-    adjusted aggregate straight from the source."""
-    out, _, _ = keyed_update(spark, sf_dir)
+    `targeted_delete_rewrite`): the same copy-on-write path rewrites
+    ONLY the files containing target customers with the price
+    adjustment applied (exact DECIMAL arithmetic — money never transits
+    double during the update), and every untouched file stays the
+    staged pool's inode. Row count must be conserved (an update never
+    adds or drops rows) and the oracle recomputes the adjusted
+    aggregate straight from the source."""
     hit = F.col("o_custkey") % UPDATE_KEY_MOD == 0
-    post = spark.read.parquet(out)
+    bump = (
+        dec("o_totalprice") + F.lit(UPDATE_BUMP).cast("decimal(14,2)")
+    ).cast("double")
+    post = rewrite_pool(
+        spark,
+        sf_dir,
+        "update",
+        hit,
+        lambda rows: rows.withColumn(
+            "o_totalprice", F.when(hit, bump).otherwise(F.col("o_totalprice"))
+        ),
+    ).read(spark)
     return (
         post.groupBy("o_orderstatus")
         .agg(

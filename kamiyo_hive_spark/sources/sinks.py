@@ -25,6 +25,7 @@ from pyspark.sql import functions as F
 from kamiyo_hive_spark.catalog import table
 from kamiyo_hive_spark.functions.money import dec, money_sum, money_sum_col
 from kamiyo_hive_spark.plans.registry import register
+from kamiyo_hive_spark.sources.txlog import TxLog
 
 SCRATCH = "/root/repo/.scratch"
 
@@ -129,6 +130,19 @@ def ensure_staging(out: str, source, build) -> str:
     return out
 
 
+def ensure_txlog(out: str, source, build) -> TxLog:
+    """:func:`ensure_staging` for a txlog table: ``build(log)`` commits
+    into a fresh log rooted at the temp dir, and the root gets the
+    ``_SUCCESS`` marker (the log's own writes land theirs under
+    ``data/<uuid>/``)."""
+
+    def stage(tmp: str) -> None:
+        build(TxLog.init(tmp))
+        open(os.path.join(tmp, "_SUCCESS"), "w").close()
+
+    return TxLog(ensure_staging(out, source, stage))
+
+
 def fresh_staging(out: str, build) -> str:
     """Always-rebuild variant for derived pools that are cheap and
     deterministic per run (sink roundtrips, copy-on-write DML outputs).
@@ -164,13 +178,6 @@ def fresh_staging_result(out: str, build, result) -> DataFrame:
         return result(out).localCheckpoint()
 
 
-def write_partitioned(df: DataFrame, path: str, partition_cols: list[str]) -> None:
-    """Bulk-insert sink: atomic-overwrite partitioned parquet append
-    target. (Delta/Iceberg MERGE is the transactional upgrade; their
-    jars aren't in this image, so the layout contract is what we test.)"""
-    df.write.mode("overwrite").partitionBy(*partition_cols).parquet(path)
-
-
 @register(
     "bulk_insert_roundtrip",
     oracle="""
@@ -195,7 +202,7 @@ def bulk_insert_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     return fresh_staging_result(
         out,
-        lambda tmp: write_partitioned(recent, tmp, ["o_orderstatus"]),
+        lambda tmp: recent.write.partitionBy("o_orderstatus").parquet(tmp),
         lambda root: spark.read.parquet(root)
         .groupBy("o_orderstatus")
         .agg(
@@ -235,106 +242,63 @@ def bulk_insert_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     tags=("S3", "sink", "upsert", "merge", "dynamic-partition-overwrite"),
 )
 def upsert_scd1_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """S3's MERGE semantics on a plain parquet warehouse: upsert a batch
-    of updated + brand-new rows into a status-partitioned orders table,
-    rewriting ONLY the partitions the batch touches (dynamic partition
-    overwrite), then prove the reread equals the logical FULL OUTER
-    merge.
+    """S3's MERGE semantics on a status-partitioned txlog table: upsert
+    a batch of updated + brand-new rows with ``merge_partitioned``, one
+    serializable commit that rewrites ONLY the partitions the batch
+    touches, then prove the reread equals the logical FULL OUTER merge.
+
+    The pre-upsert table is INGEST, not part of the upsert: it is staged
+    once per testdata generation and cloned (hard links) into a fresh
+    working table per run, so the timed work is the MERGE itself.
 
     Scale shape: the merge is `updates ∪ (base ⟕̸ updates)` — new rows
-    win by key via a left-anti join of base against the (small,
-    broadcast) update batch. Untouched partitions are never read or
-    rewritten; at 100 TB with date partitioning, a daily upsert
-    rewrites one day, not the table. Delta/Iceberg MERGE is the same
-    plan with a transaction log on top."""
-    out = os.path.join(SCRATCH, "orders_upsert")
-    base_cols = ["o_orderkey", "o_orderstatus", "o_totalprice"]
-    base = table(spark, sf_dir, "orders").select(*base_cols)
-
-    # The pre-upsert table is INGEST, not part of the upsert: stage the
-    # status-partitioned layout once per testdata generation (same
-    # discipline as `delete_pool_dir`) and hard-link it into the fresh
-    # working dir per run — the timed work is then the MERGE itself
-    # (read touched partitions, anti-join, dynamic overwrite, reread),
-    # not a full re-write of the base table every invocation (r10,
-    # guide §1.2). Dynamic overwrite unlinks the links it replaces,
-    # never the staged inodes.
-    base_dir = os.path.join(
-        SCRATCH, f"orders_upsert_base_{os.path.basename(sf_dir)}"
+    win by key via a left-anti join of the touched partitions against
+    the (small, broadcast) update batch. Untouched partitions are never
+    read or rewritten; at 100 TB with date partitioning, a daily upsert
+    rewrites one day, not the table."""
+    orders = table(spark, sf_dir, "orders").select(
+        "o_orderkey", "o_orderstatus", "o_totalprice"
     )
-    base_dir = ensure_staging(
-        base_dir,
+    # the partition spec is a path-only column: data files keep the
+    # full row, so every snapshot read sees o_orderstatus
+    by_status = F.col("o_orderstatus")
+    base = ensure_txlog(
+        os.path.join(SCRATCH, f"txlog_orders_upsert_base_{os.path.basename(sf_dir)}"),
         os.path.join(sf_dir, "orders.parquet"),
-        lambda tmp: write_partitioned(base, tmp, ["o_orderstatus"]),
+        lambda log: log.append_partitioned(
+            orders, layout=by_status, spec="status", writer="ingest"
+        ),
     )
-
-    def build(tmp: str) -> None:
-        # Walk under the base staging's lock (ADVICE r10): a concurrent
-        # session re-staging after testdata regeneration swaps
-        # generations via rename, and an unlocked walk could hard-link
-        # a mixed-generation table. The lock order (working-dir lock,
-        # then base lock) is the only order any session uses.
-        with _staging_lock(base_dir):
-            for dirpath, _dirs, files in os.walk(base_dir):
-                rel = os.path.relpath(dirpath, base_dir)
-                dst = tmp if rel == "." else os.path.join(tmp, rel)
-                os.makedirs(dst, exist_ok=True)
-                for f in files:
-                    if f in ("_SOURCE_FINGERPRINT", "_SUCCESS"):
-                        # staging markers, not table data — and Spark's
-                        # commit re-creates _SUCCESS by truncating in
-                        # place, so hard-linking it would open a staged
-                        # inode for write (ADVICE r10)
-                        continue
-                    os.link(os.path.join(dirpath, f), os.path.join(dst, f))
-
-        upd_price = (
-            dec("o_totalprice") + F.lit("100.00").cast("decimal(14,2)")
-        ).cast("double")
-        updates = (
-            base.filter(F.col("o_orderkey") % 7 == 0)
-            .select("o_orderkey", "o_orderstatus", upd_price.alias("o_totalprice"))
-            .union(
-                base.filter(F.col("o_orderkey") % 101 == 0).select(
-                    (F.col("o_orderkey") + 100000000).alias("o_orderkey"),
-                    "o_orderstatus",
-                    "o_totalprice",
-                )
+    upd_price = (
+        dec("o_totalprice") + F.lit("100.00").cast("decimal(14,2)")
+    ).cast("double")
+    updates = (
+        orders.filter(F.col("o_orderkey") % 7 == 0)
+        .select("o_orderkey", "o_orderstatus", upd_price.alias("o_totalprice"))
+        .union(
+            orders.filter(F.col("o_orderkey") % 101 == 0).select(
+                (F.col("o_orderkey") + 100000000).alias("o_orderkey"),
+                "o_orderstatus",
+                "o_totalprice",
             )
         )
+    )
 
-        stored = spark.read.parquet(tmp)
-        touched = [
-            r.o_orderstatus
-            for r in updates.select("o_orderstatus").distinct().collect()
-        ]
-        survivors = stored.filter(F.col("o_orderstatus").isin(touched)).join(
-            F.broadcast(updates), "o_orderkey", "left_anti"
+    def merge(tmp: str) -> None:
+        # clone under the base staging's lock: a concurrent re-staging
+        # swaps generations by rename mid-clone. Lock order: working
+        # table, then base — the only order any session uses.
+        with _staging_lock(base.root):
+            log = base.clone(tmp)
+        log.merge_partitioned(
+            spark, updates, by_status, "status", keys=["o_orderkey"], writer="upsert"
         )
-        # Materialize before overwriting: the merge plan reads the same
-        # files the dynamic overwrite is about to replace (Delta solves
-        # this with snapshot isolation; on plain parquet we cut the
-        # dependency).
-        merged_touched = (
-            survivors.select(*base_cols)
-            .union(updates.select(*base_cols))
-            .localCheckpoint()
-        )
-
-        prev = spark.conf.get("spark.sql.sources.partitionOverwriteMode", "static")
-        spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-        try:
-            # Overwrites only the partitions present in merged_touched.
-            merged_touched.write.mode("overwrite").partitionBy(
-                "o_orderstatus"
-            ).parquet(tmp)
-        finally:
-            spark.conf.set("spark.sql.sources.partitionOverwriteMode", prev)
 
     return fresh_staging_result(
-        out,
-        build,
-        lambda root: spark.read.parquet(root)
+        os.path.join(SCRATCH, f"txlog_orders_upsert_{os.path.basename(sf_dir)}"),
+        merge,
+        lambda root: TxLog(root)
+        .read(spark)
         .groupBy("o_orderstatus")
         .agg(
             F.count("*").alias("n_rows"),

@@ -220,8 +220,8 @@ def _reject_null_partitions(adds: list[str], spec: str) -> None:
 
 class TxLog:
     """A transaction log rooted at ``<root>/_txlog`` over data files
-    stored root-relative (manifests must survive a table-root move —
-    same rule as the snapshot manifests, VERDICT r3)."""
+    stored root-relative (manifests must survive a table-root move:
+    staged tables are built aside and renamed into place)."""
 
     def __init__(self, root: str):
         self.root = root
@@ -433,24 +433,43 @@ class TxLog:
             "left_anti",
         ).select(*cols)
 
+    def _reader(self, spark: SparkSession):
+        """A parquet reader under the LOG's schema, not the files':
+        after an additive evolution, pre-evolution files simply
+        null-fill the new columns (per-file parquet projection), and no
+        footer-inference job runs, because the log already knows the
+        answer. Pre-schema logs fall back to inference."""
+        sch = self.table_schema()
+        if not sch:
+            return spark.read
+        from pyspark.sql import types as T
+
+        return spark.read.schema(T.StructType.fromJson(json.loads(sch)))
+
+    def _data_paths(self, files) -> list[str]:
+        """Scan paths for root-relative data ``files``: a directory
+        whose non-hidden entries are exactly files of ``files`` is
+        passed as the directory. Spark lists one path on the driver,
+        where more than 32 file paths (the parallel partition discovery
+        threshold) cost a distributed listing job per read."""
+        by_dir: dict[str, list[str]] = {}
+        for f in files:
+            by_dir.setdefault(os.path.dirname(f), []).append(f)
+        paths: list[str] = []
+        for d, fs in sorted(by_dir.items()):
+            full = os.path.join(self.root, d)
+            names = {n for n in os.listdir(full) if not n.startswith(("_", "."))}
+            if d and names == {os.path.basename(f) for f in fs}:
+                paths.append(full)
+            else:
+                paths += [os.path.join(self.root, f) for f in fs]
+        return paths
+
     def read(self, spark: SparkSession, version: int | None = None) -> DataFrame:
         files = self.snapshot_files(version)
         if not files:
             raise ValueError("empty table snapshot")
-        paths = [os.path.join(self.root, f) for f in files]
-        # Read under the LOG's schema, not the files': after an
-        # additive evolution, pre-evolution files simply null-fill the
-        # new columns (per-file parquet projection) — no mergeSchema
-        # footer sweep, because the log already knows the answer.
-        sch = self.table_schema()
-        if sch:
-            from pyspark.sql import types as T
-
-            df = spark.read.schema(
-                T.StructType.fromJson(json.loads(sch))
-            ).parquet(*paths)
-        else:
-            df = spark.read.parquet(*paths)
+        df = self._reader(spark).parquet(*self._data_paths(files))
         dvs = self.dv_state(version, _live=set(files))
         if dvs:
             df = self._apply_dvs(spark, df, dvs)
@@ -841,7 +860,7 @@ class TxLog:
             if styp is None:
                 raise ValueError("empty stats-pruned read on a schema-less table")
             return spark.createDataFrame([], styp)
-        paths = [os.path.join(self.root, f) for f in keep]
+        paths = self._data_paths(keep)
         df = (
             spark.read.schema(styp).parquet(*paths)
             if styp is not None
@@ -960,7 +979,7 @@ class TxLog:
             if styp is None:
                 raise ValueError("empty pruned read on a schema-less table")
             return spark.createDataFrame([], styp)
-        paths = [os.path.join(self.root, f) for f in keep]
+        paths = self._data_paths(keep)
         df = (
             spark.read.schema(styp).parquet(*paths)
             if styp is not None
@@ -1006,9 +1025,9 @@ class TxLog:
         in an untouched partition would survive alongside the new
         insert (silent duplicate). Two guards back the contract:
 
-        - always-on (cheap, touched bytes only, early-exit): the
-          carried-over rows' recomputed ``layout`` must land back in
-          the touched set — catches a layout function that drifted
+        - always-on (a path check on the staged files, no extra scan):
+          the carried-over rows' recomputed ``layout`` must land back
+          in the touched set — catches a layout function that drifted
           between writes, which would otherwise silently migrate
           carried rows into partitions whose existing files are NOT
           being replaced (the same duplicate hazard from the other
@@ -1050,7 +1069,7 @@ class TxLog:
             untouched = sorted(set(self.snapshot_files()) - set(matching))
             if untouched:
                 outside = spark.read.schema(delta.schema).parquet(
-                    *[os.path.join(self.root, f) for f in untouched]
+                    *self._data_paths(untouched)
                 )
                 # a key whose old row was DV-deleted is NOT "moved" —
                 # merge the vectors before probing
@@ -1082,7 +1101,7 @@ class TxLog:
                 )
             if removes:
                 existing = spark.read.schema(delta.schema).parquet(
-                    *[os.path.join(self.root, f) for f in removes]
+                    *self._data_paths(removes)
                 )
                 # merge active deletion vectors into the carried-over
                 # read: this commit removes the victim files, which
@@ -1093,28 +1112,10 @@ class TxLog:
                 if dvs:
                     existing = self._apply_dvs(spark, existing, dvs)
                 existing = existing.select(*cols)
-                # stray-layout guard (see docstring): carried-over rows
-                # must route back into the touched set, else the write
-                # below would migrate them into partitions whose
-                # existing files are not being replaced. Early-exit
-                # limit(1) over touched bytes only.
-                stray = (
-                    existing.filter(~layout.cast("string").isin(touched))
-                    .limit(1)
-                    .count()
-                )
-                if stray:
-                    raise ValueError(
-                        f"merge_partitioned: a carried-over row's "
-                        f"recomputed '{spec}' layout is outside the "
-                        "touched partition set — the layout expression "
-                        "is not stable against the stored files "
-                        "(rewriting it there would duplicate rows)"
-                    )
+                # no distinct() on the probe: duplicate keys cannot
+                # change an anti-join's result, and it costs a shuffle
                 kept = existing.join(
-                    F.broadcast(delta.select(*keys).distinct()),
-                    on=keys,
-                    how="left_anti",
+                    F.broadcast(delta.select(*keys)), on=keys, how="left_anti"
                 )
                 merged = kept.unionByName(delta.select(*cols))
             else:
@@ -1132,6 +1133,22 @@ class TxLog:
                 if f.endswith(".parquet")
             )
             _reject_null_partitions(adds, spec)
+            # stray-layout guard (see docstring), read off the staged
+            # paths: the delta routes into the touched set by
+            # construction, so any other partition holds carried-over
+            # rows that this commit would migrate next to files it
+            # leaves live. The staged files leak unreferenced (vacuum
+            # GC's them), as for a losing writer.
+            if {_spec_token(f)[1] for f in adds} - {
+                escape_path_name(t) for t in touched
+            }:
+                raise ValueError(
+                    f"merge_partitioned: a carried-over row's "
+                    f"recomputed '{spec}' layout is outside the "
+                    "touched partition set — the layout expression "
+                    "is not stable against the stored files "
+                    "(rewriting it there would duplicate rows)"
+                )
             sc = self.stats_cols_in_use(rv)  # preserve the stats discipline
             try:
                 return self.commit(
@@ -1183,17 +1200,8 @@ class TxLog:
             files = self.snapshot_files(rv)
             if not files:
                 return rv
-            paths = [os.path.join(self.root, f) for f in files]
-            sch = self.table_schema()
-            from pyspark.sql import types as T
-
-            reader = (
-                spark.read.schema(T.StructType.fromJson(json.loads(sch)))
-                if sch
-                else spark.read
-            )
             hits = (
-                reader.parquet(*paths)
+                self._reader(spark).parquet(*self._data_paths(files))
                 .filter(pred)
                 .select(
                     self._rel_file_col().alias("file"),
@@ -1361,7 +1369,8 @@ class TxLog:
             rv = self.version()
             files = self.snapshot_files(rv)
             absf = {os.path.join(self.root, f): f for f in files}
-            snap = spark.read.parquet(*absf)
+            reader = self._reader(spark)
+            snap = reader.parquet(*self._data_paths(files))
             hit_abs = {
                 unquote(r["f"].replace("file://", ""))
                 for r in snap.filter(pred)
@@ -1373,9 +1382,7 @@ class TxLog:
             adds: list[str] = []
             sch = ""
             if removes:
-                rows = spark.read.parquet(
-                    *[os.path.join(self.root, f) for f in removes]
-                )
+                rows = reader.parquet(*self._data_paths(removes))
                 # merge active DVs before the transform sees the rows:
                 # the commit removes these files (retiring their
                 # attachments), so a raw read would hand the transform
@@ -1407,7 +1414,7 @@ class TxLog:
 # ---------------------------------------------------------------------------
 
 N_APPENDERS = 8
-REWRITE_KEY_MOD = 97          # same GDPR-ish target set as targeted_delete
+REWRITE_KEY_MOD = 97          # same GDPR-ish target set as targeted_delete_rewrite
 TX_CUTOVER = "1997-01-01 00:00:00"
 
 
@@ -1430,13 +1437,12 @@ def concurrent_append_table(spark: SparkSession, sf_dir: str) -> str:
 
     from pyspark.sql import functions as F
 
-    from kamiyo_hive_spark.sources.sinks import SCRATCH, ensure_staging
+    from kamiyo_hive_spark.sources.sinks import SCRATCH, ensure_txlog
 
     out = os.path.join(SCRATCH, f"txlog_orders_{os.path.basename(sf_dir)}")
     source = os.path.join(sf_dir, "orders.parquet")
 
-    def build(tmp: str) -> None:
-        log = TxLog.init(tmp)
+    def build(log: TxLog) -> None:
         o = _orders_slim(spark, sf_dir)
         errors: list[BaseException] = []
 
@@ -1462,9 +1468,8 @@ def concurrent_append_table(spark: SparkSession, sf_dir: str) -> str:
             raise RuntimeError(
                 f"expected {N_APPENDERS} contiguous commits, got {log.version() + 1}"
             )
-        open(os.path.join(tmp, "_SUCCESS"), "w").close()
 
-    return ensure_staging(out, source, build)
+    return ensure_txlog(out, source, build).root
 
 
 def _register_queries() -> None:
@@ -1937,8 +1942,6 @@ def materialize_dvs(log: TxLog, spark: SparkSession,
     and make every later `optimize_partitioned`/`merge_partitioned`
     refuse on layout purity. Mixed-spec victims (partition evolution)
     each keep their own encoding."""
-    from pyspark.sql import types as T
-
     last: CommitConflict | None = None
     for _ in range(max_attempts):
         rv = log.version()
@@ -1947,11 +1950,7 @@ def materialize_dvs(log: TxLog, spark: SparkSession,
             return rv
         victims = sorted(dvs)
         sch = log.table_schema()
-        reader = (
-            spark.read.schema(T.StructType.fromJson(json.loads(sch)))
-            if sch
-            else spark.read
-        )
+        reader = log._reader(spark)
         groups: dict = {}
         for f in victims:
             groups.setdefault(_spec_token(f), []).append(f)
@@ -2030,13 +2029,12 @@ def _register_dv_query() -> None:
         Reference anchor: soft-visibility rows (`is_visible` flips in
         `app/api/swarm/runs/route.ts` status updates) — the store
         marks, it does not rewrite."""
-        from kamiyo_hive_spark.sources.sinks import SCRATCH, ensure_staging
+        from kamiyo_hive_spark.sources.sinks import SCRATCH, ensure_txlog
 
         out = os.path.join(SCRATCH, f"txlog_dv_{os.path.basename(sf_dir)}")
         source = os.path.join(sf_dir, "orders.parquet")
 
-        def build(tmp: str) -> None:
-            log = TxLog.init(tmp)
+        def build(log: TxLog) -> None:
             o = _orders_slim(spark, sf_dir)
             log.append(o.filter(F.col("o_orderkey") % 2 == 0), writer="i0")
             log.append(o.filter(F.col("o_orderkey") % 2 == 1), writer="i1")
@@ -2058,10 +2056,8 @@ def _register_dv_query() -> None:
             # keep v3 time-travelable: its data files AND sidecars stay
             # referenced, so the query can replay merge-on-read
             vacuum(log, retain_versions=2, retain_seconds=0.0)
-            open(os.path.join(tmp, "_SUCCESS"), "w").close()
 
-        root = ensure_staging(out, source, build)
-        log = TxLog(root)
+        log = ensure_txlog(out, source, build)
         # zero-rewrite pin: both delete commits added/removed NO data
         # files (pure sidecar attachments) and the live file set is
         # unchanged across the deletes — recomputed from the manifest
@@ -2159,7 +2155,7 @@ def _register_streaming_dv_query() -> None:
         import shutil
         import time as _time
 
-        from kamiyo_hive_spark.sources.sinks import SCRATCH, ensure_staging
+        from kamiyo_hive_spark.sources.sinks import SCRATCH, ensure_staging, ensure_txlog
         from kamiyo_hive_spark.streaming.jobs import drain, streaming_run
 
         out_root = os.path.join(
@@ -2201,10 +2197,9 @@ def _register_streaming_dv_query() -> None:
             )
             return True
 
-        def build(tmp: str) -> None:
-            ckpt = tmp + ".ckpt"
+        def build(log: TxLog) -> None:
+            ckpt = log.root + ".ckpt"
             shutil.rmtree(ckpt, ignore_errors=True)
-            log = TxLog.init(tmp)
             log.append(_orders_slim(spark, sf_dir), writer="ingest")
             stream = (
                 spark.readStream.schema("o_orderkey long")
@@ -2220,10 +2215,8 @@ def _register_streaming_dv_query() -> None:
                     )
             finally:
                 shutil.rmtree(ckpt, ignore_errors=True)
-            open(os.path.join(tmp, "_SUCCESS"), "w").close()
 
-        root = ensure_staging(out_root, source, build)
-        log = TxLog(root)
+        log = ensure_txlog(out_root, source, build)
 
         # crash-recovery replay of batch 0 on EVERY run
         v_before = log.version()
@@ -2301,14 +2294,13 @@ def _register_restore_query() -> None:
         Reference anchor: the runs store's soft-rollback semantics
         (`app/api/swarm/runs/route.ts` status transitions never destroy
         rows; recovery re-points, it does not rewrite)."""
-        from kamiyo_hive_spark.sources.sinks import SCRATCH, ensure_staging
+        from kamiyo_hive_spark.sources.sinks import SCRATCH, ensure_txlog
 
         out = os.path.join(SCRATCH, f"txlog_restore_{os.path.basename(sf_dir)}")
         source = os.path.join(sf_dir, "orders.parquet")
         cut = F.lit(TX_CUTOVER).cast("timestamp")
 
-        def build(tmp: str) -> None:
-            log = TxLog.init(tmp)
+        def build(log: TxLog) -> None:
             o = _orders_slim(spark, sf_dir)
             log.append(o.filter(F.col("o_orderdate") < cut), writer="ingest-0")
             log.append(o.filter(F.col("o_orderdate") >= cut), writer="ingest-1")
@@ -2321,14 +2313,12 @@ def _register_restore_query() -> None:
             v = restore(log, 1, writer="restore-to-v1")
             if v != 3:
                 raise RuntimeError(f"restore landed at v{v}, expected 3")
-            open(os.path.join(tmp, "_SUCCESS"), "w").close()
 
-        root = ensure_staging(out, source, build)
-        log = TxLog(root)
+        log = ensure_txlog(out, source, build)
         # zero-copy pin: every restored file is the SAME inode as in v1
-        v1 = {f: os.stat(os.path.join(root, f)).st_ino
+        v1 = {f: os.stat(os.path.join(log.root, f)).st_ino
               for f in log.snapshot_files(1)}
-        now = {f: os.stat(os.path.join(root, f)).st_ino
+        now = {f: os.stat(os.path.join(log.root, f)).st_ino
                for f in log.snapshot_files()}
         zero_copy = v1 == now
         # history preserved: the bad delete is still time-travelable
@@ -2414,13 +2404,12 @@ def _register_dv_maintenance_query() -> None:
         Reference anchor: soft-visibility flips + recovery re-pointing
         in the runs store (`app/api/swarm/runs/route.ts` status
         transitions mark rows and re-point, never rewrite)."""
-        from kamiyo_hive_spark.sources.sinks import SCRATCH, ensure_staging
+        from kamiyo_hive_spark.sources.sinks import SCRATCH, ensure_txlog
 
         out = os.path.join(SCRATCH, f"txlog_dvm_{os.path.basename(sf_dir)}")
         source = os.path.join(sf_dir, "orders.parquet")
 
-        def build(tmp: str) -> None:
-            log = TxLog.init(tmp)
+        def build(log: TxLog) -> None:
             o = _orders_slim(spark, sf_dir)
             log.append(o.filter(F.col("o_orderkey") % 2 == 0), writer="i0")
             log.append(o.filter(F.col("o_orderkey") % 2 == 1), writer="i1")
@@ -2442,10 +2431,8 @@ def _register_dv_maintenance_query() -> None:
             v = materialize_dvs(log, spark)
             if v != 5 or log.dv_state():
                 raise RuntimeError("materialize did not retire the DVs")
-            open(os.path.join(tmp, "_SUCCESS"), "w").close()
 
-        root = ensure_staging(out, source, build)
-        log = TxLog(root)
+        log = ensure_txlog(out, source, build)
 
         def erased_at(v: int) -> int:
             return (
@@ -2638,7 +2625,6 @@ def zorder_optimize_partitioned(
     over a partition-value range to bound the commit's blast radius,
     exactly like optimize_partitioned."""
     from pyspark.sql import functions as F
-    from pyspark.sql import types as T
 
     cols = list(cols)
     if len(cols) < 2:
@@ -2671,11 +2657,7 @@ def zorder_optimize_partitioned(
         row = df_all.agg(*aggs).collect()[0]
         z = _morton_z(row, cols, bits)
         sch = log.table_schema()
-        reader = (
-            spark.read.schema(T.StructType.fromJson(json.loads(sch)))
-            if sch
-            else spark.read
-        )
+        reader = log._reader(spark)
         dvs_all = log.dv_state(rv)
         rel = log.stage_dir()
         adds: list[str] = []
@@ -2763,7 +2745,7 @@ def _register_zorder_query() -> None:
         (`prisma/migrations` `@@index([createdAt])`,
         `@@index([teamId])`) — two B-trees in Postgres; one clustered
         layout + manifest stats in the lake."""
-        from kamiyo_hive_spark.sources.sinks import SCRATCH, ensure_staging
+        from kamiyo_hive_spark.sources.sinks import SCRATCH, ensure_txlog
 
         out = os.path.join(SCRATCH, f"txlog_zorder_{os.path.basename(sf_dir)}")
         source = os.path.join(sf_dir, "orders.parquet")
@@ -2775,8 +2757,7 @@ def _register_zorder_query() -> None:
             cmax = int(o.agg(F.max("o_custkey")).collect()[0][0])
             return (45 * cmax) // 100, (55 * cmax) // 100
 
-        def build(tmp: str) -> None:
-            log = TxLog.init(tmp)
+        def build(log: TxLog) -> None:
             o = _orders_slim(spark, sf_dir)
             kmin, kmax = o.agg(
                 F.min("o_orderkey"), F.max("o_orderkey")
@@ -2807,10 +2788,8 @@ def _register_zorder_query() -> None:
             n_deleted = vacuum(log, retain_versions=1, retain_seconds=0.0)
             if n_deleted < N_Z_INGEST:
                 raise RuntimeError(f"vacuum removed {n_deleted} fragments")
-            open(os.path.join(tmp, "_SUCCESS"), "w").close()
 
-        root = ensure_staging(out, source, build)
-        log = TxLog(root)
+        log = ensure_txlog(out, source, build)
         o = _orders_slim(spark, sf_dir)
         clo, chi = ck_range(o)
         total = len(log.snapshot_files())
@@ -2917,7 +2896,7 @@ def _register_zorder_partitioned_query() -> None:
         (`prisma/migrations` `@@index([teamId])` + `@@index(
         [createdAt])`) — layout key + secondary key, one clustered
         layout in the lake."""
-        from kamiyo_hive_spark.sources.sinks import SCRATCH, ensure_staging
+        from kamiyo_hive_spark.sources.sinks import SCRATCH, ensure_txlog
 
         out = os.path.join(SCRATCH, f"txlog_zorderp_{os.path.basename(sf_dir)}")
         source = os.path.join(sf_dir, "orders.parquet")
@@ -2936,8 +2915,7 @@ def _register_zorder_partitioned_query() -> None:
                 ))
             return toks
 
-        def build(tmp: str) -> None:
-            log = TxLog.init(tmp)
+        def build(log: TxLog) -> None:
             o = _orders_slim(spark, sf_dir)
             kmin, kmax = o.agg(
                 F.min("o_orderkey"), F.max("o_orderkey")
@@ -2973,10 +2951,8 @@ def _register_zorder_partitioned_query() -> None:
                 raise RuntimeError("recluster changed the partition layout")
             if vacuum(log, retain_versions=1, retain_seconds=0.0) < total:
                 raise RuntimeError("vacuum left ingest fragments behind")
-            open(os.path.join(tmp, "_SUCCESS"), "w").close()
 
-        root = ensure_staging(out, source, build)
-        log = TxLog(root)
+        log = ensure_txlog(out, source, build)
         o = _orders_slim(spark, sf_dir)
         clo, chi = ck_range(o)
         files = log.snapshot_files()
@@ -3054,13 +3030,12 @@ def _register_maintenance_queries() -> None:
         is ingest+maintenance; the query reads the compacted table."""
         import threading
 
-        from kamiyo_hive_spark.sources.sinks import SCRATCH, ensure_staging
+        from kamiyo_hive_spark.sources.sinks import SCRATCH, ensure_txlog
 
         out = os.path.join(SCRATCH, f"txlog_optimize_{os.path.basename(sf_dir)}")
         source = os.path.join(sf_dir, "orders.parquet")
 
-        def build(tmp: str) -> None:
-            log = TxLog.init(tmp)
+        def build(log: TxLog) -> None:
             o = _orders_slim(spark, sf_dir)
             for i in range(N_SMALL_APPENDS):
                 log.append(
@@ -3077,10 +3052,8 @@ def _register_maintenance_queries() -> None:
             n_deleted = vacuum(log, retain_versions=1, retain_seconds=0.0)
             if n_deleted < N_SMALL_APPENDS:
                 raise RuntimeError(f"vacuum removed {n_deleted} files, expected >= {N_SMALL_APPENDS}")
-            open(os.path.join(tmp, "_SUCCESS"), "w").close()
 
-        root = ensure_staging(out, source, build)
-        log = TxLog(root)
+        log = ensure_txlog(out, source, build)
         files = log.snapshot_files()
         return (
             log.read(spark)
@@ -3129,15 +3102,14 @@ def _register_partitioned_optimize_query() -> None:
         aggregate (compaction must be a pure re-layout), the
         per-partition live file count, and the version count
         (6 appends + 1 rewrite)."""
-        from kamiyo_hive_spark.sources.sinks import SCRATCH, ensure_staging
+        from kamiyo_hive_spark.sources.sinks import SCRATCH, ensure_txlog
 
         out = os.path.join(
             SCRATCH, f"txlog_optimize_part_{os.path.basename(sf_dir)}"
         )
         source = os.path.join(sf_dir, "orders.parquet")
 
-        def build(tmp: str) -> None:
-            log = TxLog.init(tmp)
+        def build(log: TxLog) -> None:
             o = _orders_slim(spark, sf_dir)
             for i in range(N_PART_APPENDS):
                 log.append_partitioned(
@@ -3160,10 +3132,8 @@ def _register_partitioned_optimize_query() -> None:
                     f"vacuum removed {n_deleted} files, "
                     f"expected >= {N_PART_APPENDS}"
                 )
-            open(os.path.join(tmp, "_SUCCESS"), "w").close()
 
-        root = ensure_staging(out, source, build)
-        log = TxLog(root)
+        log = ensure_txlog(out, source, build)
         # per-partition live file counts, from manifest metadata alone
         per_year: dict[str, int] = {}
         for f in log.snapshot_files():
@@ -3472,7 +3442,6 @@ def read_changes(
     of incremental consumption (a downstream consumer processes the
     day's delta, never the table)."""
     from pyspark.sql import functions as F
-    from pyspark.sql import types as T
 
     old = set(log.snapshot_files(v_from))
     new = set(log.snapshot_files(v_to))
@@ -3481,18 +3450,12 @@ def read_changes(
     added = sorted(new - old)
     removed = sorted(old - new)
     parts = []
-    # The log knows the table schema — reading under it (like
-    # TxLog.read) skips a driver-side footer-inference pass per feed
-    # relation; a 4-version rollup otherwise pays ~10 of them.
-    sch = log.table_schema()
-    reader = (
-        spark.read.schema(T.StructType.fromJson(json.loads(sch)))
-        if sch
-        else spark.read
-    )
+    # reading under the log's schema skips a footer-inference job per
+    # feed relation; a 4-version rollup otherwise pays ~10 of them
+    reader = log._reader(spark)
 
     def visible(files: list[str], dvs: dict) -> DataFrame:
-        df = reader.parquet(*[os.path.join(log.root, f) for f in files])
+        df = reader.parquet(*log._data_paths(files))
         sub = {f: d for f, d in dvs.items() if f in set(files)}
         return log._apply_dvs(spark, df, sub) if sub else df
 
@@ -3527,7 +3490,7 @@ def read_changes(
 
         p_from = positions(dv_from)
         p_to = positions(dv_to)
-        rows = reader.parquet(*[os.path.join(log.root, f) for f in surv])
+        rows = reader.parquet(*log._data_paths(surv))
         cols = rows.columns
         tagged = rows.select(
             *cols,
@@ -3668,7 +3631,7 @@ def weighted_change_feed(
     wmap = F.create_map(
         *[x for f in scan for x in (F.lit(f), F.lit(file_w.get(f, 0)))]
     )
-    rows = reader.parquet(*[os.path.join(log.root, f) for f in scan]).select(
+    rows = reader.parquet(*log._data_paths(scan)).select(
         *cols,
         log._rel_file_col().alias("_wf_file"),
         F.col("_metadata.row_index").alias("_wf_pos"),
@@ -3710,13 +3673,12 @@ def cdf_table(spark: SparkSession, sf_dir: str) -> str:
     by tests/test_txlog.py."""
     from pyspark.sql import functions as F
 
-    from kamiyo_hive_spark.sources.sinks import SCRATCH, ensure_staging
+    from kamiyo_hive_spark.sources.sinks import SCRATCH, ensure_txlog
 
     out = os.path.join(SCRATCH, f"txlog_cdf_{os.path.basename(sf_dir)}")
     source = os.path.join(sf_dir, "orders.parquet")
 
-    def build(tmp: str) -> None:
-        log = TxLog.init(tmp)
+    def build(log: TxLog) -> None:
         o = _orders_slim(spark, sf_dir)
         cut = F.lit(TX_CUTOVER).cast("timestamp")
 
@@ -3738,9 +3700,8 @@ def cdf_table(spark: SparkSession, sf_dir: str) -> str:
             lambda rows: rows.filter(F.col("o_custkey") % 12 != 0),
             writer="gdpr",
         )  # v2
-        open(os.path.join(tmp, "_SUCCESS"), "w").close()
 
-    return ensure_staging(out, source, build)
+    return ensure_txlog(out, source, build).root
 
 
 def _register_cdf_query() -> None:
@@ -3959,13 +3920,12 @@ def _register_dv_ivm_query() -> None:
         Reference anchor: downstream aggregations over soft-visibility
         flips (`app/api/swarm/runs/route.ts` status updates) must see
         mark/unmark transitions, not raw row churn."""
-        from kamiyo_hive_spark.sources.sinks import SCRATCH, ensure_staging
+        from kamiyo_hive_spark.sources.sinks import SCRATCH, ensure_txlog
 
         out = os.path.join(SCRATCH, f"txlog_dvivm_{os.path.basename(sf_dir)}")
         source = os.path.join(sf_dir, "orders.parquet")
 
-        def build(tmp: str) -> None:
-            log = TxLog.init(tmp)
+        def build(log: TxLog) -> None:
             o = _orders_slim(spark, sf_dir)
             log.append(o.filter(F.col("o_orderkey") % 2 == 0), writer="i0")
             log.append(o.filter(F.col("o_orderkey") % 2 == 1), writer="i1")
@@ -3980,10 +3940,8 @@ def _register_dv_ivm_query() -> None:
             v = restore(log, 2, writer="unwind-materialize")
             if v != 4 or not log.dv_state():
                 raise RuntimeError("restore did not reinstate the vectors")
-            open(os.path.join(tmp, "_SUCCESS"), "w").close()
 
-        root = ensure_staging(out, source, build)
-        log = TxLog(root)
+        log = ensure_txlog(out, source, build)
 
         # One SIGNED aggregation over ONE weighted pass — same shape
         # and exactness argument as `acid_incremental_rollup` (r10
@@ -4067,13 +4025,12 @@ def _register_schema_evolution_query() -> None:
         the money total across both generations — against a source
         recompute. Fingerprint-cached staging (the two-generation
         history is ingest)."""
-        from kamiyo_hive_spark.sources.sinks import SCRATCH, ensure_staging
+        from kamiyo_hive_spark.sources.sinks import SCRATCH, ensure_txlog
 
         out = os.path.join(SCRATCH, f"txlog_evo_{os.path.basename(sf_dir)}")
         source = os.path.join(sf_dir, "orders.parquet")
 
-        def build(tmp: str) -> None:
-            log = TxLog.init(tmp)
+        def build(log: TxLog) -> None:
             o = _orders_slim(spark, sf_dir)
             cut = F.lit(TX_CUTOVER).cast("timestamp")
             log.append(o.filter(F.col("o_orderdate") < cut), writer="v0")
@@ -4082,10 +4039,8 @@ def _register_schema_evolution_query() -> None:
                 .withColumn("priority", F.col("o_custkey") % 5 == 0)
             )
             log.append(evolved, writer="v1-evolved", merge_schema=True)
-            open(os.path.join(tmp, "_SUCCESS"), "w").close()
 
-        root = ensure_staging(out, source, build)
-        t = TxLog(root).read(spark)
+        t = ensure_txlog(out, source, build).read(spark)
         return (
             t.groupBy("o_orderstatus")
             .agg(
@@ -4142,13 +4097,12 @@ def _register_partition_evolution_query() -> None:
         opened); per-file spec semantics mean old data is NEVER
         rewritten when the layout policy changes — the 100 TB reason
         partition evolution exists."""
-        from kamiyo_hive_spark.sources.sinks import SCRATCH, ensure_staging
+        from kamiyo_hive_spark.sources.sinks import SCRATCH, ensure_txlog
 
         out = os.path.join(SCRATCH, f"txlog_pspec_{os.path.basename(sf_dir)}")
         source = os.path.join(sf_dir, "orders.parquet")
 
-        def build(tmp: str) -> None:
-            log = TxLog.init(tmp)
+        def build(log: TxLog) -> None:
             o = _orders_slim(spark, sf_dir)
             cut = F.lit(TX_CUTOVER).cast("timestamp")
             log.append_partitioned(
@@ -4163,17 +4117,11 @@ def _register_partition_evolution_query() -> None:
                 spec="o_year",
                 writer="v1-year-layout",
             )
-            open(os.path.join(tmp, "_SUCCESS"), "w").close()
 
-        root = ensure_staging(out, source, build)
-        log = TxLog(root)
+        log = ensure_txlog(out, source, build)
         files = log.pruned_files("status", "F")
-        paths = [os.path.join(root, f) for f in files]
-        sch = log.table_schema()
-        from pyspark.sql import types as T
-
-        reader = spark.read.schema(T.StructType.fromJson(json.loads(sch)))
-        t = reader.parquet(*paths).filter(F.col("o_orderstatus") == "F")
+        paths = [os.path.join(log.root, f) for f in files]
+        t = log._reader(spark).parquet(*paths).filter(F.col("o_orderstatus") == "F")
         return (
             t.groupBy(F.year("o_orderdate").cast("long").alias("o_year"))
             .agg(

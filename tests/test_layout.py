@@ -1,111 +1,62 @@
-"""Physical-layout effectiveness tests: the z-order and snapshot
-operators' ORACLE parity proves the layouts are semantically invisible;
-these tests prove they actually deliver the physical win they exist
-for (same discipline as the bloom-pruning effectiveness test).
+"""Physical-layout tests: the z-order and snapshot operators' ORACLE
+parity proves the layouts are semantically invisible; these tests pin
+the mechanisms underneath (z-order pruning on both keys is pinned by
+tests/test_txlog.py::test_zorder_makes_both_columns_prunable).
 """
 
 from __future__ import annotations
 
-import os
-
-import pyarrow.parquet as pq
 from pyspark.sql import functions as F
 
-from kamiyo_hive_spark.catalog import table
-from kamiyo_hive_spark.sources.layout import (
-    SNAPSHOT_CUTOVER,
-    box_bounds,
-    build_snapshots,
-    read_increment,
-    read_snapshot,
-    write_zordered,
-    zvalue,
-)
+from kamiyo_hive_spark.functions.money import cents
+from kamiyo_hive_spark.sources.layout import SNAPSHOT_CUTOVER, snapshot_log
+from kamiyo_hive_spark.sources.txlog import _morton_z, read_changes
 
 
-def _file_ranges(out: str, cols: tuple[str, str]):
-    """Per-file (min, max) of two columns from parquet footer stats."""
-    ranges = []
-    for f in sorted(os.listdir(out)):
-        if not f.endswith(".parquet"):
-            continue
-        md = pq.ParquetFile(os.path.join(out, f)).metadata
-        stats = {c: [None, None] for c in cols}
-        for rg in range(md.num_row_groups):
-            for ci in range(md.num_columns):
-                col = md.row_group(rg).column(ci)
-                name = col.path_in_schema
-                if name in stats and col.statistics is not None:
-                    lo, hi = col.statistics.min, col.statistics.max
-                    cur = stats[name]
-                    cur[0] = lo if cur[0] is None else min(cur[0], lo)
-                    cur[1] = hi if cur[1] is None else max(cur[1], hi)
-        ranges.append({c: tuple(stats[c]) for c in cols})
-    return ranges
-
-
-def _files_overlapping_box(ranges, box_part, box_supp):
-    def overlaps(r):
-        (plo, phi), (slo, shi) = r["l_partkey"], r["l_suppkey"]
-        return not (phi < box_part[0] or plo > box_part[1]
-                    or shi < box_supp[0] or slo > box_supp[1])
-
-    return sum(1 for r in ranges if overlaps(r))
-
-
-def test_zorder_prunes_files_1d_layout_cannot(spark, sf_dir, tmp_path):
-    plo, phi, slo, shi = box_bounds(spark, sf_dir)
-    box_part, box_supp = (plo, phi), (slo, shi)
-    zdir = write_zordered(spark, sf_dir)
-    zranges = _file_ranges(zdir, ("l_partkey", "l_suppkey"))
-    n_zfiles = len(zranges)
-    assert n_zfiles >= 4  # enough files for skipping to mean anything
-
-    # baseline: the natural layout (range-partitioned by orderkey —
-    # what a plain ingest produces), same file count
-    base = str(tmp_path / "lineitem_natural")
-    (
-        table(spark, sf_dir, "lineitem")
-        .select("l_orderkey", "l_partkey", "l_suppkey", "l_quantity")
-        .repartitionByRange(n_zfiles, "l_orderkey")
-        .write.mode("overwrite")
-        .parquet(base)
-    )
-    branges = _file_ranges(base, ("l_partkey", "l_suppkey"))
-
-    z_hit = _files_overlapping_box(zranges, box_part, box_supp)
-    b_hit = _files_overlapping_box(branges, box_part, box_supp)
-    # natural layout: every file spans the whole key space -> no pruning
-    assert b_hit == len(branges)
-    # z-order: the box touches a strict minority of files
-    assert z_hit < n_zfiles / 2, (z_hit, n_zfiles)
-
-
-def test_zvalue_interleave_known_bits(spark):
+def test_morton_z_interleave_known_bits(spark):
+    # bounds [0, 2^bits - 1] make each bucket id the value itself;
     # x=0b101 (bits at 0,2), y=0b011 (bits at 0,1)
     # z = x bits at even positions (0,4) | y bits at odd positions (1,3)
-    row = (
-        spark.range(1)
-        .select(zvalue(F.lit(0b101).cast("long"), F.lit(0b011).cast("long"), bits=3))
+    bits = 3
+    bounds = {"min_x": 0, "max_x": (1 << bits) - 1, "min_y": 0, "max_y": (1 << bits) - 1}
+    z = (
+        spark.createDataFrame([(0b101, 0b011)], "x long, y long")
+        .select(_morton_z(bounds, ("x", "y"), bits))
         .collect()[0][0]
     )
-    assert row == (1 << 0) | (1 << 4) | (1 << 1) | (1 << 3)
+    assert z == (1 << 0) | (1 << 4) | (1 << 1) | (1 << 3)
 
 
 def test_snapshot_isolation_and_incremental_algebra(spark, sf_dir):
-    root = build_snapshots(spark, sf_dir)
-    v1 = read_snapshot(spark, root, "v1")
-    v2 = read_snapshot(spark, root, "v2")
-    inc = read_increment(spark, root, "v1", "v2")
+    log = snapshot_log(spark, sf_dir)
+    v0, v1 = log.read(spark, version=0), log.read(spark, version=1)
+    inc = read_changes(log, spark, 0, 1)
 
+    # isolation: version 0 holds no post-cutover rows although 1 exists
     cut = F.lit(SNAPSHOT_CUTOVER).cast("timestamp")
-    # isolation: v1 contains no post-cutover rows even though v2 exists
-    assert v1.filter(F.col("o_orderdate") >= cut).count() == 0
-    # increment is exactly the delta
-    n1, ni, n2 = v1.count(), inc.count(), v2.count()
-    assert n1 + ni == n2
-    assert ni > 0 and n1 > 0
-    # incremental read never touches v1's files
-    v1_files = {r[0] for r in v1.select(F.input_file_name()).distinct().collect()}
-    inc_files = {r[0] for r in inc.select(F.input_file_name()).distinct().collect()}
-    assert v1_files.isdisjoint(inc_files)
+    assert v0.filter(F.col("o_orderdate") >= cut).count() == 0
+    # an append-only transition feeds only inserts
+    assert inc.filter(F.col("_change_type") != "insert").count() == 0
+
+    # v0 + increment == v1, per status: row counts and exact cent sums
+    def per_status(df):
+        return {
+            r[0]: (r[1], r[2])
+            for r in df.groupBy("o_orderstatus")
+            .agg(F.count("*"), F.sum(cents("o_totalprice")))
+            .collect()
+        }
+
+    a, i, b = per_status(v0), per_status(inc), per_status(v1)
+    assert a and i  # non-vacuous on both sides
+    for s in b:
+        n0, c0 = a.get(s, (0, 0))
+        n1, c1 = i.get(s, (0, 0))
+        assert (n0 + n1, c0 + c1) == b[s], s
+    assert set(a) | set(i) == set(b)
+
+    # the incremental read never touches version 0's files
+    def files(df):
+        return {r[0] for r in df.select(F.input_file_name()).distinct().collect()}
+
+    assert files(v0).isdisjoint(files(inc))

@@ -1,115 +1,97 @@
 """File-touch accounting for the maintenance operators: oracle parity
 proves WHAT the result is; these prove HOW it was produced — a
-targeted delete must not rewrite the world, and compaction must
-actually reduce the file count.
+targeted delete or update must not rewrite the world, and compaction
+must actually reduce the file count.
 """
 
 from __future__ import annotations
 
 import os
 
+from pyspark.sql import functions as F
+
+from kamiyo_hive_spark.functions.money import dec
 from kamiyo_hive_spark.sources.maintenance import (
     COMPACT_FILES,
     DELETE_KEY_MOD,
+    DELETE_POOL_FILES,
     FRAGMENT_FILES,
-    compact,
-    delete_pool_dir,
-    fragmented_dir,
-    targeted_delete,
+    UPDATE_BUMP,
+    UPDATE_KEY_MOD,
+    compacted_log,
+    delete_pool_log,
+    rewrite_pool,
 )
 
 
-def _parquet_files(d: str) -> list[str]:
-    return sorted(f for f in os.listdir(d) if f.endswith(".parquet"))
+def _check_touch_accounting(pool, log) -> None:
+    """Shared copy-on-write checks. The rewrite is version 1 of the
+    per-op table, and version 0 is the clone of the staged pool."""
+    base = pool.snapshot_files()
+    assert len(base) == DELETE_POOL_FILES
+    assert log.snapshot_files(0) == base
+    rewritten = log.history()[1].removes
+    # selective: some files affected, but not all (true at the test
+    # scale factors — see DELETE_POOL_FILES)
+    assert 0 < len(rewritten) < len(base)
+    untouched = sorted(set(base) - set(rewritten))
+    assert sorted(set(log.snapshot_files()) & set(base)) == untouched
+    # untouched files are the staged pool's SAME inodes (zero copy)
+    for f in untouched:
+        assert (
+            os.stat(os.path.join(log.root, f)).st_ino
+            == os.stat(os.path.join(pool.root, f)).st_ino
+        ), f
 
 
 def test_targeted_delete_touches_subset_and_links_rest(spark, sf_dir):
-    pool = delete_pool_dir(spark, sf_dir)
-    out, n_total, n_rewritten = targeted_delete(spark, sf_dir)
-    assert n_total == len(_parquet_files(pool))
-    # the delete is selective: some files affected, but not all —
-    # custkey % DELETE_KEY_MOD targets land in a subset of the
-    # DELETE_POOL_FILES custkey ranges (64 files keeps this true at
-    # every sf — see the constant's comment in maintenance.py)
-    assert 0 < n_rewritten <= n_total
-    # untouched files are the SAME inodes (hard links, zero copy)
-    pool_inodes = {
-        f: os.stat(os.path.join(pool, f)).st_ino for f in _parquet_files(pool)
-    }
-    shared = [
-        f
-        for f in _parquet_files(out)
-        if f in pool_inodes
-        and os.stat(os.path.join(out, f)).st_ino == pool_inodes[f]
-    ]
-    assert len(shared) == n_total - n_rewritten
+    pool = delete_pool_log(spark, sf_dir)
+    doomed = F.col("o_custkey") % DELETE_KEY_MOD == 0
+    log = rewrite_pool(
+        spark, sf_dir, "delete", doomed, lambda rows: rows.filter(~doomed)
+    )
+    _check_touch_accounting(pool, log)
+    post, pooled = log.read(spark), pool.read(spark)
     # no doomed rows survive
-    from pyspark.sql import functions as F
-
-    post = spark.read.parquet(out)
-    assert post.filter(F.col("o_custkey") % DELETE_KEY_MOD == 0).count() == 0
+    assert post.filter(doomed).count() == 0
     # row conservation: post-delete == pool minus doomed
-    pooled = spark.read.parquet(pool)
-    n_doomed = pooled.filter(F.col("o_custkey") % DELETE_KEY_MOD == 0).count()
-    assert post.count() == pooled.count() - n_doomed
+    n_doomed = pooled.filter(doomed).count()
     assert n_doomed > 0  # non-vacuous
-
-
-def test_compaction_reduces_files_and_orders_rows(spark, sf_dir):
-    import pyarrow.parquet as pq
-
-    frags = fragmented_dir(spark, sf_dir)
-    out = compact(spark, sf_dir)
-    n_frag, n_comp = len(_parquet_files(frags)), len(_parquet_files(out))
-    assert n_frag == FRAGMENT_FILES
-    assert n_comp <= COMPACT_FILES
-    assert n_comp < n_frag
-    # each compacted file is internally sorted on the cluster key
-    for f in _parquet_files(out):
-        keys = pq.read_table(
-            os.path.join(out, f), columns=["l_orderkey", "l_linenumber"]
-        ).to_pandas()
-        tuples = list(zip(keys["l_orderkey"], keys["l_linenumber"]))
-        assert tuples == sorted(tuples), f
+    assert post.count() == pooled.count() - n_doomed
 
 
 def test_keyed_update_conserves_rows_and_links(spark, sf_dir):
     """UPDATE must conserve row count, touch only the files containing
     target keys, and leave the rest as the same inodes."""
-    from pyspark.sql import functions as F
-
-    from kamiyo_hive_spark.sources.maintenance import (
-        UPDATE_KEY_MOD,
-        keyed_update,
+    pool = delete_pool_log(spark, sf_dir)
+    hit = F.col("o_custkey") % UPDATE_KEY_MOD == 0
+    bump = (dec("o_totalprice") + F.lit(UPDATE_BUMP).cast("decimal(14,2)")).cast("double")
+    log = rewrite_pool(
+        spark, sf_dir, "update", hit,
+        lambda rows: rows.withColumn(
+            "o_totalprice", F.when(hit, bump).otherwise(F.col("o_totalprice"))
+        ),
     )
-
-    import os
-
-    out, n_total, n_rewritten = keyed_update(spark, sf_dir)
-    assert 0 < n_rewritten <= n_total
-    pool = delete_pool_dir(spark, sf_dir)
-    pooled = spark.read.parquet(pool)
-    post = spark.read.parquet(out)
+    _check_touch_accounting(pool, log)
+    post, pooled = log.read(spark), pool.read(spark)
     assert post.count() == pooled.count()
     # updated rows really changed; untouched rows really didn't
-    hit = F.col("o_custkey") % UPDATE_KEY_MOD == 0
     n_hit = pooled.filter(hit).count()
     assert n_hit > 0
-    joined = (
-        pooled.select("o_orderkey", F.col("o_totalprice").alias("before"))
-        .join(post.select("o_orderkey", F.col("o_totalprice").alias("after"), "o_custkey"), "o_orderkey")
+    joined = pooled.select("o_orderkey", F.col("o_totalprice").alias("before")).join(
+        post.select("o_orderkey", F.col("o_totalprice").alias("after"), "o_custkey"),
+        "o_orderkey",
     )
     changed = joined.filter(F.col("before") != F.col("after"))
     assert changed.count() == n_hit
-    assert changed.filter(~(F.col("o_custkey") % UPDATE_KEY_MOD == 0)).count() == 0
-    # untouched files are shared inodes
-    pool_inodes = {
-        f: os.stat(os.path.join(pool, f)).st_ino for f in _parquet_files(pool)
-    }
-    shared = [
-        f
-        for f in _parquet_files(out)
-        if f in pool_inodes
-        and os.stat(os.path.join(out, f)).st_ino == pool_inodes[f]
-    ]
-    assert shared  # at least some files untouched at test scale
+    assert changed.filter(~hit).count() == 0
+
+
+def test_compaction_reduces_files_with_identical_rows(spark, sf_dir):
+    log = compacted_log(spark, sf_dir)
+    assert len(log.snapshot_files(0)) == FRAGMENT_FILES
+    assert len(log.snapshot_files()) == COMPACT_FILES
+    before, after = log.read(spark, 0), log.read(spark)
+    assert after.count() == before.count() > 0
+    assert before.exceptAll(after).count() == 0
+    assert after.exceptAll(before).count() == 0

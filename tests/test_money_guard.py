@@ -11,7 +11,9 @@ total stays below 2^53. These tests pin:
 - the debug guard (SPARK_GRAFT_MONEY_GUARD=1): a group total at or
   beyond 2^53 raises instead of drifting silently,
 - the default path is untouched (guard off ⇒ same expression as
-  before — no plan change for bench or production).
+  before — no plan change for bench or production),
+- NULL totals pass the guard, and a long sum past 2^63 raises
+  (session.py pins ANSI mode) instead of wrapping.
 """
 
 from __future__ import annotations
@@ -86,6 +88,19 @@ def test_guard_passes_below_bound(spark, monkeypatch):
     assert fast == exact == 4.0
 
 
+def test_guard_passes_null_totals(spark, monkeypatch):
+    # An all-NULL money column and an empty frame both sum to NULL; the
+    # guard must return that NULL, not trip assert_true on it.
+    monkeypatch.setenv("SPARK_GRAFT_MONEY_GUARD", "1")
+    df = spark.createDataFrame([(None,), (None,)], "x double")
+    for frame in (df, df.limit(0)):
+        row = frame.agg(
+            money_sum_col("x").alias("col"),
+            money_sum(dec("x"), scale=2).alias("expr"),
+        ).collect()[0]
+        assert row["col"] is None and row["expr"] is None
+
+
 def test_guard_off_plan_unchanged(spark, monkeypatch):
     # The bench/production contract: with the guard off the emitted
     # expression is exactly the pre-guard one (no CASE WHEN wrapper).
@@ -96,3 +111,13 @@ def test_guard_off_plan_unchanged(spark, monkeypatch):
     monkeypatch.setenv("SPARK_GRAFT_MONEY_GUARD", "1")
     plan_on = df.agg(money_sum_col("x").alias("s"))._jdf.queryExecution().toString()
     assert "assert_true" in plan_on
+
+
+def test_long_sum_past_2_63_raises(spark):
+    # session.py pins spark.sql.ansi.enabled: an integer sub-unit total
+    # that passes 2^63 must fail loudly rather than wrap negative.
+    assert spark.conf.get("spark.sql.ansi.enabled") == "true"
+    df = spark.createDataFrame([(2**62,), (2**62,)], "units long")
+    assert df.limit(1).agg(F.sum("units")).collect()[0][0] == 2**62
+    with pytest.raises(Exception, match="ARITHMETIC_OVERFLOW"):
+        df.agg(F.sum("units")).collect()

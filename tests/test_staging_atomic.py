@@ -14,7 +14,6 @@ builds (no Spark) so the atomicity contract itself is pinned:
 
 from __future__ import annotations
 
-import json
 import multiprocessing as mp
 import os
 import shutil
@@ -176,29 +175,29 @@ def test_fresh_staging_cleans_tmp_on_failure(scratch):
     assert not [d for d in os.listdir(scratch) if ".tmp." in d]
 
 
-def test_snapshot_manifests_are_root_relative(spark, sf_dir):
-    """Manifests must survive the staging dir being renamed/moved —
-    i.e. store root-relative paths (layout.py)."""
-    from kamiyo_hive_spark.sources.layout import build_snapshots, read_snapshot
-    from kamiyo_hive_spark.sources.sinks import SCRATCH
+def test_txlog_root_survives_copy_and_rename(spark, sf_dir, tmp_path):
+    """Staged txlog tables are built in a temp dir and renamed into
+    place (`ensure_staging` / `fresh_staging`), so the log's file list
+    AND its deletion-vector rows must be root-relative: a copied and a
+    renamed root read the same rows as the original, with the attached
+    vector still in force."""
+    from pyspark.sql import functions as F
 
-    # force a rebuild: a staging cached from a pre-r4 build carries
-    # absolute-path manifests (still readable, but not what we assert)
-    stale = os.path.join(SCRATCH, f"orders_snapshots_{os.path.basename(sf_dir)}")
-    shutil.rmtree(stale, ignore_errors=True)
-    root = build_snapshots(spark, sf_dir)
-    for v in ("v1", "v2"):
-        with open(os.path.join(root, f"manifest_{v}.json")) as fh:
-            files = json.load(fh)["files"]
-        assert files, v
-        assert all(not os.path.isabs(f) for f in files), files[:2]
-    # a moved copy of the table root still resolves
-    moved = root + ".moved"
-    shutil.rmtree(moved, ignore_errors=True)
-    shutil.copytree(root, moved)
-    try:
-        n_orig = read_snapshot(spark, root, "v2").count()
-        n_moved = read_snapshot(spark, moved, "v2").count()
-        assert n_orig == n_moved > 0
-    finally:
-        shutil.rmtree(moved, ignore_errors=True)
+    from kamiyo_hive_spark.catalog import table
+    from kamiyo_hive_spark.sources.txlog import TxLog
+
+    orders = table(spark, sf_dir, "orders").select("o_orderkey", "o_custkey")
+    build = str(tmp_path / "build")
+    log = TxLog.init(build)
+    log.append(orders, writer="base")
+    log.delete_where_dv(spark, F.col("o_custkey") % 7 == 0)
+    assert log.dv_state()  # non-vacuous: a vector is attached
+    want = sorted(tuple(r) for r in log.read(spark).collect())
+    assert 0 < len(want) < orders.count()  # the vector hides rows
+
+    copied, moved = str(tmp_path / "copied"), str(tmp_path / "moved")
+    shutil.copytree(build, copied)
+    os.rename(build, moved)
+    for root in (copied, moved):
+        got = sorted(tuple(r) for r in TxLog(root).read(spark).collect())
+        assert got == want, root

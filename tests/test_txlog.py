@@ -87,6 +87,22 @@ def test_snapshot_isolation_and_time_travel(tmp_path):
     assert log.snapshot_files() == [b]
 
 
+def test_data_paths_pass_only_exactly_referenced_dirs(tmp_path):
+    """A stage dir is scanned as one path only when its non-hidden
+    entries are exactly the requested files; otherwise the files are
+    passed one by one, so a read never picks up an unrequested file."""
+    root = str(tmp_path)
+    log = TxLog.init(root)
+    a = [_touch(root, f"data/a/part-{i}.parquet") for i in range(3)]
+    _touch(root, "data/a/_SUCCESS")
+    _touch(root, "data/a/.part-0.parquet.crc")
+    b = [_touch(root, f"data/b/part-{i}.parquet") for i in range(2)]
+    assert log._data_paths(a + b[:1]) == [
+        os.path.join(root, "data/a"), os.path.join(root, b[0])
+    ]
+    assert log._data_paths(a[:2]) == [os.path.join(root, f) for f in a[:2]]
+
+
 def test_checkpoint_replay_matches_full_replay(tmp_path):
     root = str(tmp_path)
     log = TxLog.init(root)
