@@ -25,7 +25,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from kamiyo_hive_spark.catalog import table
-from kamiyo_hive_spark.functions.money import cents, dec, money_sum, money_sum_col, one_minus, one_plus, rev_sum
+from kamiyo_hive_spark.functions.money import cents, dec, exact_sum, finish_units, money_sum, money_sum_col, one_minus, one_plus, rev_sum
 from kamiyo_hive_spark.plans.registry import register
 
 NOW = "2024-01-31 00:00:00"  # fixed 'now' for event-time windows (events span Jan 2024)
@@ -63,9 +63,10 @@ def pricing_summary(spark: SparkSession, sf_dir: str) -> DataFrame:
     li = table(spark, sf_dir, "lineitem").filter(
         F.col("l_shipdate") <= _ts("1998-09-02 00:00:00")
     )
-    # disc_price sums as scale-4 long units (rev_units path, ~80×
-    # 2^53 margin per group at sf0.1); charge is scale-6 whose largest
-    # group sum (~1.1e16) EXCEEDS 2^53 — it stays decimal on purpose.
+    # disc_price sums as scale-4 long units (rev_sum). charge stays
+    # decimal on purpose: its largest scale-6 group total is 1.1e16 at
+    # sf0.1, so as a long it would pass 2^63 near sf80, short of the
+    # 100 TB design point.
     disc_price = dec("l_extendedprice") * one_minus("l_discount")
     charge = disc_price * one_plus("l_tax")
     return (
@@ -184,13 +185,8 @@ def weighted_sum(spark: SparkSession, sf_dir: str) -> DataFrame:
         # rev_units): the decimal(14,2)×(14,2) product accumulated in a
         # non-compact decimal buffer; both factors are exact integers in
         # sub-units, so the long product is the exact scale-4 value.
-        # Capacity: the largest group total measured at sf0.1 is
-        # 2.7e15 scale-4 units — 3.3x under 2^53 (bound documented in
-        # money.py). SPARK_GRAFT_MONEY_GUARD does NOT cover this inline
-        # sum: it guards only money_sum, rev_sum and money_sum_col.
         .agg(
-            (F.sum(cents("l_quantity") * cents("l_extendedprice")) / 1.0e4)
-            .cast("double")
+            exact_sum(cents("l_quantity") * cents("l_extendedprice"), 4)
             .alias("weighted_total")
         )
     )
@@ -217,8 +213,7 @@ def banded_multiplier_weight(spark: SparkSession, sf_dir: str) -> DataFrame:
     o = table(spark, sf_dir, "orders")
     age_days = F.datediff(_ts("2001-12-31 00:00:00"), F.col("o_orderdate"))
     # Multiplier in scale-2 integer units (100/120/150/200): the
-    # weighted value is a scale-4 long product (rev_units discipline,
-    # functions/money.py capacity bound — per-group sums ~1e14 here).
+    # weighted value is a scale-4 long product (rev_units discipline).
     mult_c = (
         F.when(age_days < 365, 100)
         .when(age_days < 1095, 120)
@@ -228,11 +223,7 @@ def banded_multiplier_weight(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     return (
         o.groupBy("o_orderstatus")
-        .agg(
-            (F.sum(cents("o_totalprice") * mult_c) / F.lit(1.0e4))
-            .cast("double")
-            .alias("weighted_value")
-        )
+        .agg(exact_sum(cents("o_totalprice") * mult_c, 4).alias("weighted_value"))
     )
 
 
@@ -497,11 +488,8 @@ def revenue_forecast_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
         & F.col("l_discount").between(0.03, 0.07)
         & (F.col("l_quantity") < 24)
     ).agg(
-        # price*disc as a scale-4 long product (rev_units discipline;
-        # filtered sums ~1e12, far under the 2^53 bound).
-        (F.sum(cents("l_extendedprice") * cents("l_discount")) / F.lit(1.0e4))
-        .cast("double")
-        .alias("revenue_delta"),
+        # price*disc as a scale-4 long product (rev_units discipline)
+        exact_sum(cents("l_extendedprice") * cents("l_discount"), 4).alias("revenue_delta"),
         F.count("*").alias("n_lines"),
     )
 
@@ -542,7 +530,7 @@ def rollup_hierarchy(spark: SparkSession, sf_dir: str) -> DataFrame:
         hourly.groupBy(F.date_trunc("day", "hour").alias("day"), "event_type")
         .agg(
             F.sum("n_events").alias("n_events"),
-            (F.sum("total_value_c") / 100.0).cast("double").alias("total_value"),
+            exact_sum("total_value_c", 2).alias("total_value"),
         )
     )
     return daily
@@ -708,7 +696,7 @@ def incremental_rollup_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy("month", "o_orderstatus")
         .agg(
             F.sum("n_orders").alias("n_orders"),
-            (F.sum("price_partial_c") / 100.0).cast("double").alias("total_price"),
+            exact_sum("price_partial_c", 2).alias("total_price"),
         )
     )
 
@@ -759,6 +747,6 @@ def salted_hot_key_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
         out="total_value",
     ).select(
         "event_type",
-        (F.col("total_value") / 100.0).cast("double").alias("total_value"),
+        finish_units("total_value", 2).alias("total_value"),
     )
     return counts.join(values, "event_type")

@@ -12,14 +12,10 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from kamiyo_hive_spark.catalog import table
-from kamiyo_hive_spark.functions.money import cents, dec, money_sum, money_sum_col, one_minus, rev_sum, rev_units
+from kamiyo_hive_spark.functions.money import cents, exact_sum, finish_units, money_sum_col, rev_sum, rev_units
 from kamiyo_hive_spark.plans.registry import register
 
 _REV = "CAST(l_extendedprice AS DECIMAL(14,2)) * (CAST(1 AS DECIMAL(4,2)) - CAST(l_discount AS DECIMAL(4,2)))"
-
-
-def _revenue() -> F.Column:
-    return dec("l_extendedprice") * one_minus("l_discount")
 
 
 @register(
@@ -112,15 +108,15 @@ def promo_revenue_pct(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     p = table(spark, sf_dir, "part")
     # Numerator/denominator as scale-4 long unit sums (rev_units): each
-    # operand is bit-identical to the decimal-sum→double cast, so the
-    # ratio is too (functions/money.py capacity bound applies).
+    # operand is the decimal-sum→double cast's exact double, so the
+    # ratio is too.
     rev_u = rev_units()
     return (
         li.join(F.broadcast(p), li.l_partkey == p.p_partkey)
         .agg(
             (
-                (F.sum(F.when(F.col("p_type") == "PROMO", rev_u)) / F.lit(1.0e4)).cast("double")
-                / (F.sum(rev_u) / F.lit(1.0e4)).cast("double")
+                exact_sum(F.when(F.col("p_type") == "PROMO", rev_u), 4)
+                / exact_sum(rev_u, 4)
                 * 100.0
             ).alias("promo_pct"),
             F.count("*").alias("n_lines"),
@@ -156,14 +152,12 @@ def large_volume_customers(spark: SparkSession, sf_dir: str) -> DataFrame:
     # sum was the query's widest aggregation (decimal(24,2) buffer over
     # every lineitem row); the long sum is exact, the HAVING threshold
     # compares the same exact quantity (>150.00 ⇔ >15000 sub-units),
-    # and the served double is the identical round-trip (money.py).
+    # and finish_units serves the exact double.
     big = (
         li.groupBy("l_orderkey")
         .agg(F.sum(cents("l_quantity")).alias("qty_c"))
         .filter(F.col("qty_c") > F.lit(15000).cast("long"))
-        .select(
-            "l_orderkey", (F.col("qty_c") / 100.0).cast("double").alias("total_qty")
-        )
+        .select("l_orderkey", finish_units("qty_c", 2).alias("total_qty"))
     )
     o = table(spark, sf_dir, "orders")
     c = table(spark, sf_dir, "customer")

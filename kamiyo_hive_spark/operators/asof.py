@@ -209,7 +209,7 @@ def scd2_point_in_time_enrich(spark: SparkSession, sf_dir: str) -> DataFrame:
         right_ts="valid_from",
         right_payload=["status"],
     )
-    from kamiyo_hive_spark.functions.money import dec, money_sum_col
+    from kamiyo_hive_spark.functions.money import money_sum_col
 
     return (
         enriched.groupBy(

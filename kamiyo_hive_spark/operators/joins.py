@@ -23,14 +23,10 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from kamiyo_hive_spark.catalog import table
-from kamiyo_hive_spark.functions.money import dec, money_sum, one_minus, rev_sum
+from kamiyo_hive_spark.functions.money import rev_sum
 from kamiyo_hive_spark.plans.registry import register
 
 _REVENUE_SQL = "CAST(l_extendedprice AS DECIMAL(14,2)) * (CAST(1 AS DECIMAL(4,2)) - CAST(l_discount AS DECIMAL(4,2)))"
-
-
-def _revenue() -> F.Column:
-    return dec("l_extendedprice") * one_minus("l_discount")
 
 
 @register(

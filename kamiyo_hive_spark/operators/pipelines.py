@@ -15,7 +15,6 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from kamiyo_hive_spark.catalog import table
-from kamiyo_hive_spark.functions.money import dec, money_sum
 from kamiyo_hive_spark.plans.registry import register
 
 

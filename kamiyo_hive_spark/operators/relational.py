@@ -201,7 +201,7 @@ def scalar_subquery_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Filter against a scalar aggregate of the same table (parts priced
     >1.03× the mean (prices are tightly banded)). Spark plans the scalar subquery as a broadcast of
     one value — two passes over the scan, no driver round-trip."""
-    from kamiyo_hive_spark.functions.money import dec, money_sum, money_sum_col
+    from kamiyo_hive_spark.functions.money import money_sum_col
 
     p = table(spark, sf_dir, "part")
     avg_price = p.select((money_sum_col("p_retailprice") / F.count("*")).alias("a"))

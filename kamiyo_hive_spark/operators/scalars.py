@@ -19,7 +19,7 @@ from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from kamiyo_hive_spark.catalog import table
-from kamiyo_hive_spark.functions.money import dec, money_sum, money_sum_col
+from kamiyo_hive_spark.functions.money import dec, money_sum_col
 from kamiyo_hive_spark.plans.registry import register
 
 

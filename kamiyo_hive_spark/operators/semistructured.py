@@ -19,7 +19,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from kamiyo_hive_spark.catalog import parallel_table, table
-from kamiyo_hive_spark.functions.money import dec, money_sum, money_sum_col
+from kamiyo_hive_spark.functions.money import money_sum_col
 from kamiyo_hive_spark.plans.registry import register
 
 

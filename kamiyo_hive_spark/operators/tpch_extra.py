@@ -38,17 +38,13 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from kamiyo_hive_spark.catalog import table
-from kamiyo_hive_spark.functions.money import cents, dec, money_sum, money_sum_col, one_minus, rev_sum, rev_units
+from kamiyo_hive_spark.functions.money import cents, dec, exact_sum, money_sum_col, rev_sum, rev_units
 from kamiyo_hive_spark.plans.registry import register
 
 _REV = (
     "CAST(l_extendedprice AS DECIMAL(14,2)) * "
     "(CAST(1 AS DECIMAL(4,2)) - CAST(l_discount AS DECIMAL(4,2)))"
 )
-
-
-def _revenue() -> F.Column:
-    return dec("l_extendedprice") * one_minus("l_discount")
 
 
 def _suppliers_in_region(spark: SparkSession, sf_dir: str, region: str) -> DataFrame:
@@ -237,8 +233,7 @@ def regional_market_share(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     o = table(spark, sf_dir, "orders")
     # Conditional-ratio on scale-4 long unit sums (rev_units): both
-    # operands bit-identical to the decimal-sum→double casts
-    # (functions/money.py capacity bound applies).
+    # operands are the decimal-sum→double casts' exact doubles.
     rev_u = rev_units()
     nation_rev = F.when(F.col("supp_nation") == "NATION_3", rev_u).otherwise(
         F.lit(0).cast("long")
@@ -250,10 +245,7 @@ def regional_market_share(spark: SparkSession, sf_dir: str) -> DataFrame:
         .join(c, o.o_custkey == c.c_custkey)
         .groupBy(F.year("o_orderdate").alias("o_year"))
         .agg(
-            (
-                (F.sum(nation_rev) / F.lit(1.0e4)).cast("double")
-                / (F.sum(rev_u) / F.lit(1.0e4)).cast("double")
-            ).alias("mkt_share"),
+            (exact_sum(nation_rev, 4) / exact_sum(rev_u, 4)).alias("mkt_share"),
             F.count("*").alias("n_lines"),
         )
     )
@@ -295,11 +287,7 @@ def nation_product_profit(spark: SparkSession, sf_dir: str) -> DataFrame:
     # form accumulated a scale-6 wide-decimal per row; both terms are
     # exact integers in sub-units (rev_units is scale 4 → ×100; the
     # 60%-of-retail cost is 60 × retail_cents × qty_cents, scale
-    # 2+2+2=6), so the long sum is the exact scale-6 total. Capacity:
-    # largest |group sum| measured at sf0.1 is 2.4e13 scale-6 units —
-    # 381× under 2^53 (bound in money.py). SPARK_GRAFT_MONEY_GUARD does
-    # NOT cover this inline sum: it guards only money_sum, rev_sum and
-    # money_sum_col.
+    # 2+2+2=6), so the long sum is the exact scale-6 total.
     profit_units = rev_units() * F.lit(100).cast("long") - (
         F.lit(60).cast("long") * cents("p_retailprice") * cents("l_quantity")
     )
@@ -312,7 +300,7 @@ def nation_product_profit(spark: SparkSession, sf_dir: str) -> DataFrame:
         .join(F.broadcast(sn), li.l_suppkey == sn.s_suppkey)
         .join(o, li.l_orderkey == o.o_orderkey)
         .groupBy("supp_nation", F.year("o_orderdate").alias("o_year"))
-        .agg((F.sum(profit_units) / 1.0e6).cast("double").alias("profit"))
+        .agg(exact_sum(profit_units, 6).alias("profit"))
     )
 
 

@@ -247,7 +247,7 @@ OrdersRestDataSource = _build_orders_rest_datasource()
 from pyspark.sql import DataFrame, SparkSession  # noqa: E402
 from pyspark.sql import functions as F  # noqa: E402
 
-from kamiyo_hive_spark.functions.money import dec, money_sum, money_sum_col  # noqa: E402
+from kamiyo_hive_spark.functions.money import money_sum_col  # noqa: E402
 from kamiyo_hive_spark.plans.registry import register  # noqa: E402
 
 REST_STATUS = "F"

@@ -36,7 +36,7 @@ from http.server import BaseHTTPRequestHandler, ThreadingHTTPServer
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from kamiyo_hive_spark.functions.money import dec, money_sum_col
+from kamiyo_hive_spark.functions.money import money_sum_col
 from kamiyo_hive_spark.plans.registry import register
 
 EVENTS_STREAM_SCHEMA = (

@@ -1475,7 +1475,7 @@ def concurrent_append_table(spark: SparkSession, sf_dir: str) -> str:
 def _register_queries() -> None:
     from pyspark.sql import functions as F
 
-    from kamiyo_hive_spark.functions.money import dec, money_sum, money_sum_col
+    from kamiyo_hive_spark.functions.money import money_sum_col
     from kamiyo_hive_spark.plans.registry import register
 
     @register(
@@ -1983,7 +1983,7 @@ def materialize_dvs(log: TxLog, spark: SparkSession,
 def _register_dv_query() -> None:
     from pyspark.sql import functions as F
 
-    from kamiyo_hive_spark.functions.money import dec, money_sum, money_sum_col
+    from kamiyo_hive_spark.functions.money import money_sum_col
     from kamiyo_hive_spark.plans.registry import register
 
     DV_MOD_A, DV_MOD_B = 97, 101
@@ -2098,7 +2098,7 @@ DV_STREAM_WRITER = "dv-stream"
 def _register_streaming_dv_query() -> None:
     from pyspark.sql import functions as F
 
-    from kamiyo_hive_spark.functions.money import dec, money_sum, money_sum_col
+    from kamiyo_hive_spark.functions.money import money_sum_col
     from kamiyo_hive_spark.plans.registry import register
 
     residues_sql = ", ".join(str(r) for r in DV_STREAM_RESIDUES)
@@ -2257,7 +2257,7 @@ _register_streaming_dv_query()
 def _register_restore_query() -> None:
     from pyspark.sql import functions as F
 
-    from kamiyo_hive_spark.functions.money import dec, money_sum, money_sum_col
+    from kamiyo_hive_spark.functions.money import money_sum_col
     from kamiyo_hive_spark.plans.registry import register
 
     @register(
@@ -2347,7 +2347,7 @@ _register_restore_query()
 def _register_dv_maintenance_query() -> None:
     from pyspark.sql import functions as F
 
-    from kamiyo_hive_spark.functions.money import dec, money_sum, money_sum_col
+    from kamiyo_hive_spark.functions.money import money_sum_col
     from kamiyo_hive_spark.plans.registry import register
 
     DVM_MOD = 97  # the GDPR-ish erasure key set
@@ -2696,7 +2696,7 @@ def zorder_optimize_partitioned(
 def _register_zorder_query() -> None:
     from pyspark.sql import functions as F
 
-    from kamiyo_hive_spark.functions.money import dec, money_sum, money_sum_col
+    from kamiyo_hive_spark.functions.money import money_sum_col
     from kamiyo_hive_spark.plans.registry import register
 
     N_Z_INGEST = 6
@@ -2839,7 +2839,7 @@ _register_zorder_query()
 def _register_zorder_partitioned_query() -> None:
     from pyspark.sql import functions as F
 
-    from kamiyo_hive_spark.functions.money import dec, money_sum, money_sum_col
+    from kamiyo_hive_spark.functions.money import money_sum_col
     from kamiyo_hive_spark.plans.registry import register
 
     N_ZP_INGEST = 4
@@ -2997,7 +2997,7 @@ _register_zorder_partitioned_query()
 def _register_maintenance_queries() -> None:
     from pyspark.sql import functions as F
 
-    from kamiyo_hive_spark.functions.money import dec, money_sum, money_sum_col
+    from kamiyo_hive_spark.functions.money import money_sum_col
     from kamiyo_hive_spark.plans.registry import register
 
     N_SMALL_APPENDS = 12
@@ -3070,7 +3070,7 @@ def _register_maintenance_queries() -> None:
 def _register_partitioned_optimize_query() -> None:
     from pyspark.sql import functions as F
 
-    from kamiyo_hive_spark.functions.money import dec, money_sum, money_sum_col
+    from kamiyo_hive_spark.functions.money import money_sum_col
     from kamiyo_hive_spark.plans.registry import register
 
     N_PART_APPENDS = 6
@@ -3167,7 +3167,7 @@ def _register_partitioned_optimize_query() -> None:
 def _register_clone_query() -> None:
     from pyspark.sql import functions as F
 
-    from kamiyo_hive_spark.functions.money import dec, money_sum, money_sum_col
+    from kamiyo_hive_spark.functions.money import money_sum_col
     from kamiyo_hive_spark.plans.registry import register
 
     @register(
@@ -3321,7 +3321,7 @@ class TxLogBatchSink:
 def _register_streaming_sink_query() -> None:
     from pyspark.sql import functions as F
 
-    from kamiyo_hive_spark.functions.money import dec, money_sum_col
+    from kamiyo_hive_spark.functions.money import money_sum_col
     from kamiyo_hive_spark.plans.registry import register
 
     @register(
@@ -3707,7 +3707,7 @@ def cdf_table(spark: SparkSession, sf_dir: str) -> str:
 def _register_cdf_query() -> None:
     from pyspark.sql import functions as F
 
-    from kamiyo_hive_spark.functions.money import dec, money_sum, money_sum_col
+    from kamiyo_hive_spark.functions.money import money_sum_col
     from kamiyo_hive_spark.plans.registry import register
 
     @register(
@@ -3781,7 +3781,7 @@ _register_cdf_query()
 def _register_ivm_query() -> None:
     from pyspark.sql import functions as F
 
-    from kamiyo_hive_spark.functions.money import cents, money_sum_col
+    from kamiyo_hive_spark.functions.money import cents, exact_sum, money_sum_col
     from kamiyo_hive_spark.plans.registry import register
 
     @register(
@@ -3839,8 +3839,7 @@ def _register_ivm_query() -> None:
             acc.groupBy("o_orderstatus")
             .agg(
                 F.sum("_weight").cast("long").alias("n_rows"),
-                (F.sum(cents("o_totalprice") * F.col("_weight")) / 100.0)
-                .cast("double")
+                exact_sum(cents("o_totalprice") * F.col("_weight"), 2)
                 .alias("total_price"),
             )
         ).localCheckpoint()
@@ -3869,7 +3868,7 @@ _register_ivm_query()
 def _register_dv_ivm_query() -> None:
     from pyspark.sql import functions as F
 
-    from kamiyo_hive_spark.functions.money import cents, money_sum_col
+    from kamiyo_hive_spark.functions.money import cents, exact_sum, money_sum_col
     from kamiyo_hive_spark.plans.registry import register
 
     DVI_MOD = 89
@@ -3961,8 +3960,7 @@ def _register_dv_ivm_query() -> None:
         # ngram_lm_quality records the identical pattern).
         maintained = acc.groupBy("o_orderstatus").agg(
             F.sum("_weight").cast("long").alias("n_rows"),
-            (F.sum(cents("o_totalprice") * F.col("_weight")) / 100.0)
-            .cast("double")
+            exact_sum(cents("o_totalprice") * F.col("_weight"), 2)
             .alias("total_price"),
         ).localCheckpoint()
         full = (
@@ -3993,7 +3991,7 @@ _register_dv_ivm_query()
 def _register_schema_evolution_query() -> None:
     from pyspark.sql import functions as F
 
-    from kamiyo_hive_spark.functions.money import dec, money_sum, money_sum_col
+    from kamiyo_hive_spark.functions.money import money_sum_col
     from kamiyo_hive_spark.plans.registry import register
 
     @register(
@@ -4062,7 +4060,7 @@ _register_schema_evolution_query()
 def _register_partition_evolution_query() -> None:
     from pyspark.sql import functions as F
 
-    from kamiyo_hive_spark.functions.money import dec, money_sum, money_sum_col
+    from kamiyo_hive_spark.functions.money import money_sum_col
     from kamiyo_hive_spark.plans.registry import register
 
     @register(
@@ -4138,7 +4136,7 @@ _register_partition_evolution_query()
 def _register_cdf_stream_query() -> None:
     from pyspark.sql import functions as F
 
-    from kamiyo_hive_spark.functions.money import cents, dec, money_sum_col
+    from kamiyo_hive_spark.functions.money import cents, exact_sum
     from kamiyo_hive_spark.plans.registry import register
 
     @register(
@@ -4222,9 +4220,7 @@ def _register_cdf_stream_query() -> None:
         # integrality argument as the batch rollups (money.py).
         agg = stream.groupBy("o_orderstatus").agg(
             F.sum(sign).cast("long").alias("n_rows"),
-            (F.sum(cents("o_totalprice") * sign) / 100.0)
-            .cast("double")
-            .alias("total_price"),
+            exact_sum(cents("o_totalprice") * sign, 2).alias("total_price"),
         )
         name = "cdf_tail_mem"
         with streaming_run(agg, "complete") as writer:

@@ -30,7 +30,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.streaming import DataStreamWriter, StreamingQuery
 
-from kamiyo_hive_spark.functions.money import dec, money_sum_col
+from kamiyo_hive_spark.functions.money import money_sum_col
 from kamiyo_hive_spark.plans.registry import register
 
 
